@@ -122,9 +122,7 @@ def run_replay_job(
         routed.replay.select("data", "attributes", "message_id", "ordering_key"),
         audit_rate=audit_rate,
     )
-    # both the warehouse and requeue branches filter res.validated — persist
-    # the parent so decode+validate runs once (round-8 streaming profile)
-    res.validated.persist()
+    # the warehouse and requeue branches share ingest()'s stored parent: one decode
     # Cross-run exactly-once: a crash/rerun between the warehouse append and
     # the DLQ rewrite below would re-ingest the same messages — the same
     # event-date-pruned existing-keys anti-join the streaming sink uses makes
@@ -155,7 +153,7 @@ def run_replay_job(
     requeued = requeued.localCheckpoint(eager=True)  # DLQ dir is about to be rewritten
     requeued.write.mode("overwrite").parquet(dlq_path)
 
-    for df in (routed.replay, routed.parked, recovered, res.validated):
+    for df in (routed.replay, routed.parked, recovered):
         df.unpersist()
     return ReplayJobStats(
         n_replayed=n_replayed,

@@ -6,7 +6,8 @@ normalization -> warehouse row -> idempotent insert. The reference processes
 one HTTP message at a time with exceptions for control flow; here the whole
 chain is columnar and per-row outcomes are *data* (a ``status`` column), so
 one pass over a 100 TB input is a single narrow stage with no shuffle until
-the final dedup.
+the final dedup. As in the reference (``src/handler.js:43-60``) each message
+is decoded once: the branches share a lazily stored parent (:func:`ingest`).
 
 Stage map (reference file:line -> function here):
 - decode        ``src/handler.js:43-44``        -> :func:`decode_messages`
@@ -21,6 +22,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -35,7 +37,8 @@ def decode_messages(raw: DataFrame) -> DataFrame:
 
     Undecodable data (bad base64 / non-JSON) produces a null envelope struct;
     the status column marks it FORMAT_ERROR (the reference's 422 path,
-    ``src/app.test.js:67-75``) instead of throwing.
+    ``src/app.test.js:67-75``) instead of throwing: ``try_to_binary`` returns
+    NULL on malformed base64 where ANSI ``unbase64`` aborts the job.
     """
     # arrival_seq: per-message arrival order (the HTTP-arrival order the
     # reference sees implicitly). Doubles as the first-write-wins tiebreak
@@ -61,7 +64,8 @@ def decode_messages(raw: DataFrame) -> DataFrame:
     # flagship; at 100 TB this is ~8x less JSON-parse CPU in the decode
     # stage, the pipeline's dominant cost).
     json_text = F.when(
-        F.monotonically_increasing_id() >= 0, F.unbase64(F.col("data")).cast("string")
+        F.monotonically_increasing_id() >= 0,
+        F.try_to_binary(F.col("data"), F.lit("base64")).cast("string"),
     )
     decoded = raw.withColumn("arrival_seq", F.monotonically_increasing_id()).withColumn(
         "_envelope", F.from_json(json_text, schemas.ENVELOPE_SCHEMA)
@@ -154,11 +158,7 @@ class IngestResult:
     warehouse: DataFrame  # deduped rows to append (204 success)
     sampled_out: DataFrame  # kept-out by audit sampling (204, not persisted)
     dlq: DataFrame  # terminal failures: raw message + status + attempts=0
-    # the decoded+validated parent all three branches filter — a caller
-    # consuming more than one branch should persist THIS (decode+validate
-    # then runs once per batch, not once per branch; round-8 streaming
-    # profile: the per-branch recompute was ~25% of micro-batch wall)
-    validated: DataFrame = None
+    validated: DataFrame  # shared parent, stored by the first action on any branch (no persist needed)
 
 
 def ingest(raw: DataFrame, audit_rate: float = 1.0, normalize_phones: bool = True) -> IngestResult:
@@ -173,6 +173,13 @@ def ingest(raw: DataFrame, audit_rate: float = 1.0, normalize_phones: bool = Tru
     never pay it either — the UDF rewrites only ``payload`` while the dedup
     partitions/orders on (idempotency_key, message_id, arrival_seq), so the
     surviving row per key, and hence every output, is identical either way.
+
+    Decode once: the first action on any branch stores the validated parent
+    (a lazy DISK_ONLY ``localCheckpoint``: in-memory checkpoints of long
+    strings have OOM-ed the JVM) and later actions read it. Only DLQ-bound
+    rows keep the raw ``data``/``attributes``. Trade-offs: a lost executor
+    fails the job (no lineage); a single-branch consumer pays one store;
+    blocks are freed on garbage collection; AQE runs a shuffle in ``raw`` here.
     """
     # ingest may receive DataFrames that never went through load_table
     # (fixtures, streams) — make sure workers can import the phone UDF module
@@ -181,8 +188,12 @@ def ingest(raw: DataFrame, audit_rate: float = 1.0, normalize_phones: bool = Tru
     ship_package(raw.sparkSession)
 
     validated = validate_envelopes(decode_messages(raw))
+    terminal = F.col("status").isin(*schemas.TERMINAL_STATUSES)
+    validated = validated.withColumns(
+        {"data": F.when(terminal, F.col("data")), "attributes": F.when(terminal, F.col("attributes"))}
+    ).localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
 
-    dlq = validated.filter(F.col("status").isin(*schemas.TERMINAL_STATUSES)).select(
+    dlq = validated.filter(terminal).select(
         "message_id",
         "ordering_key",
         "attributes",

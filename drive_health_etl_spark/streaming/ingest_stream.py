@@ -25,6 +25,7 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -82,8 +83,12 @@ def dedup_against_warehouse(
       at that size the shuffle is amortized over the rows.
     """
     try:
-        spark.read.parquet(warehouse_path)
-    except Exception:
+        # declared schema: no schema-inference jobs, and a corrupt warehouse
+        # fails the batch instead of silently disabling this guard
+        wh = spark.read.schema("idempotency_key string, event_date date").parquet(warehouse_path)
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
         return rows  # first batch: warehouse doesn't exist yet
     stats = rows.agg(
         F.min("event_date").alias("lo"),
@@ -92,14 +97,10 @@ def dedup_against_warehouse(
     ).collect()[0]
     if stats["lo"] is None:
         return rows  # empty batch
-    wh_keys = (
-        spark.read.parquet(warehouse_path)
-        .filter(
-            (F.col("event_date") >= F.date_sub(F.lit(stats["lo"]), horizon_days))
-            & (F.col("event_date") <= F.date_add(F.lit(stats["hi"]), horizon_days))
-        )
-        .select("idempotency_key")
-    )
+    wh_keys = wh.filter(
+        (F.col("event_date") >= F.date_sub(F.lit(stats["lo"]), horizon_days))
+        & (F.col("event_date") <= F.date_add(F.lit(stats["hi"]), horizon_days))
+    ).select("idempotency_key")
     if stats["n"] <= broadcast_max_keys:
         dup = wh_keys.join(
             F.broadcast(rows.select("idempotency_key")), "idempotency_key", "left_semi"
@@ -111,17 +112,12 @@ def dedup_against_warehouse(
 def _process_batch(cfg: StreamIngestConfig):
     def inner(batch: DataFrame, epoch_id: int) -> None:
         spark = batch.sparkSession
-        # Multi-sink foreachBatch: persist the decoded+validated PARENT of
-        # the warehouse/DLQ branches (not the raw batch) — decode+validate
-        # then runs once per micro-batch instead of once per sink branch
-        # (round-8 profile: the DLQ branch's recompute was ~1.8 s of a
-        # ~7.4 s micro-batch at sf0.1).
+        # Multi-sink foreachBatch: ingest() stores its decoded parent on the
+        # first action, so the dedup, warehouse and DLQ jobs decode once.
         res = ingest(batch, audit_rate=cfg.audit_rate, normalize_phones=cfg.normalize_phones)
-        res.validated.persist()
-        rows_base = None
+        rows_base = res.warehouse.withColumn("event_date", F.to_date("occurred_at"))
+        rows_base.persist()
         try:
-            rows_base = res.warehouse.withColumn("event_date", F.to_date("occurred_at"))
-            rows_base.persist()
             rows = dedup_against_warehouse(
                 spark, cfg.warehouse_path, rows_base, horizon_days=cfg.dedup_horizon_days
             )
@@ -137,12 +133,7 @@ def _process_batch(cfg: StreamIngestConfig):
                     cfg.dlq_path
                 )
         finally:
-            res.validated.unpersist()
-            if rows_base is not None:
-                # unpersist the frame that was actually persisted — the
-                # post-dedup frame is a different plan and unpersisting it
-                # would leak the cached base until session end
-                rows_base.unpersist()
+            rows_base.unpersist()  # the persisted frame, not the post-dedup plan
 
     return inner
 

@@ -143,3 +143,51 @@ def test_decode_messages_parses_envelope_exactly_once(spark):
     validated = validate_envelopes(decode_messages(raw))
     plan = validated._jdf.queryExecution().executedPlan().toString()
     assert plan.count("from_json") == 1, f"expected exactly 1 from_json, got {plan.count('from_json')}"
+
+
+def test_malformed_base64_routes_to_dlq(spark):
+    # bodies that are not valid base64 (the benchmark's decode probe): each
+    # must land in the DLQ as FORMAT_ERROR, and none may abort the job
+    bodies = ("YWJj=", "!!notbase64", "abc", "%%%%", "not base64 at all")
+    raw = spark.createDataFrame(
+        [(b, {"origin": "probe"}, f"probe-{i}", None) for i, b in enumerate(bodies)], schemas.RAW_MESSAGE_SCHEMA
+    )
+    res = ingest(raw, audit_rate=1.0)
+    assert res.warehouse.count() == 0
+    dlq = res.dlq.collect()
+    assert sorted(r["message_id"] for r in dlq) == [f"probe-{i}" for i in range(len(bodies))]
+    assert {r["status"] for r in dlq} == {schemas.STATUS_FORMAT_ERROR}
+    assert sorted(r["data"] for r in dlq) == sorted(bodies)  # raw body kept for replay
+
+
+def test_ingest_decodes_each_message_once(spark, tmp_path):
+    # a warehouse write then a DLQ write (two actions, two jobs) must scan
+    # and decode the input once: the second action reads ingest()'s stored
+    # parent. Spark counts reads of stored blocks as stage input records
+    # too, so only scan stages (an RDD graph holding a FileScanRDD) are
+    # summed: their input records are the messages read from the files.
+    from drive_health_etl_spark.operators.ingest import write_warehouse
+
+    envelopes.fixture_df(spark).write.parquet(str(tmp_path / "in"))
+    raw = spark.read.schema(schemas.RAW_MESSAGE_SCHEMA).parquet(str(tmp_path / "in"))
+    n_msgs = raw.count()
+    sc = spark.sparkContext
+    group = f"decode-once-{tmp_path.name}"
+    sc.setJobGroup(group, group)
+    try:
+        res = ingest(raw, audit_rate=1.0)
+        write_warehouse(res.warehouse, str(tmp_path / "wh"))
+        res.dlq.write.parquet(str(tmp_path / "dlq"))
+    finally:
+        sc._jsc.clearJobGroup()
+    assert spark.read.parquet(str(tmp_path / "dlq")).count() == 5  # malformed rows present
+
+    tracker, store = sc.statusTracker(), sc._jsc.sc().statusStore()
+    graph_dot = sc._jvm.org.apache.spark.ui.scope.RDDOperationGraph.makeDotFile
+    stage_ids = {s for j in tracker.getJobIdsForGroup(group) for s in tracker.getJobInfo(j).stageIds}
+    scanned = 0
+    for sid in stage_ids:
+        stage = store.lastStageAttempt(sid)
+        if stage.status().toString() != "SKIPPED" and "FileScanRDD" in graph_dot(store.operationGraphForStage(sid)):
+            scanned += stage.inputRecords()
+    assert scanned == n_msgs

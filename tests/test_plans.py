@@ -259,7 +259,11 @@ BENCH_PLAN_FINGERPRINTS = {
     # r9 shuffle collapse: one up-front (k, id) repartition; dedup, shared
     # count, and the semi join run exchange-free off that partitioning
     "dedup_suffix_doubling": {"shuffle_exchange": 3, "broadcast_exchange": 2, "BroadcastHashJoin": 2, "ShuffledHashJoin": 1},
-    "pipeline_ingest_e2e": {"shuffle_exchange": 4},
+    # 4 -> 3: ingest() checkpoints its decoded parent, so the events
+    # repartition under the envelope build runs below the checkpoint cut
+    # (as a construction-time AQE stage) and leaves the final plan; the
+    # live shuffles are the dedup window, the group-by and the order-by
+    "pipeline_ingest_e2e": {"shuffle_exchange": 3},
     "o8_projection_rename": {},
     "a1_group_count": {"shuffle_exchange": 1},
     "j1_inner_equi": {"shuffle_exchange": 1, "broadcast_exchange": 1, "BroadcastHashJoin": 1},

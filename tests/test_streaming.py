@@ -221,3 +221,21 @@ def test_dedup_against_warehouse_strategies(spark, tmp_path):
 
     # first batch: warehouse absent -> passthrough
     assert dedup_against_warehouse(spark, str(tmp_path / "missing"), batch).count() == 4
+
+
+def test_dedup_against_warehouse_fails_loudly_on_corrupt_warehouse(spark, tmp_path):
+    """Only a missing warehouse skips the cross-batch guard; a warehouse
+    that exists but cannot be read fails the batch instead of silently
+    letting already-written keys through again."""
+    from py4j.protocol import Py4JJavaError
+
+    from drive_health_etl_spark.streaming.ingest_stream import dedup_against_warehouse
+
+    part = tmp_path / "wh" / "event_date=2026-01-01"
+    part.mkdir(parents=True)
+    (part / "part-00000.parquet").write_bytes(b"this is not a parquet file")
+    batch = spark.createDataFrame(
+        [("k1", "2026-01-01")], "idempotency_key string, event_date string"
+    ).withColumn("event_date", F.to_date("event_date"))
+    with pytest.raises(Py4JJavaError, match="FAILED_READ_FILE"):
+        dedup_against_warehouse(spark, str(tmp_path / "wh"), batch).collect()
