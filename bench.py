@@ -477,6 +477,8 @@ def window_flagged(shares: dict | None) -> list[str]:
         reasons.append(f"steal {shares['steal_share']:.1%}")
     if shares.get("external_cpu_share", 0.0) > IDLE_EXT_SHARE_MAX:
         reasons.append(f"external {shares['external_cpu_share']:.1%}")
+    if shares.get("iowait_share", 0.0) > IDLE_IOWAIT_SHARE_MAX:
+        reasons.append(f"iowait {shares['iowait_share']:.1%}")
     return reasons
 
 

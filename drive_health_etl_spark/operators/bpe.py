@@ -40,15 +40,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from drive_health_etl_spark.operators.fitcache import FitCache
+from drive_health_etl_spark.operators.fitcache import dataset_cached
 from drive_health_etl_spark.operators.text import TOKENS_SQL, tokens_col
 from drive_health_etl_spark.sources.tables import load_table
 
 BPE_ROUNDS = 3
-
-# (applicationId, sf_dir) -> trained merge rows; values are tiny lists, the
-# scope-LRU bound just keeps a long-lived multi-dataset driver tidy
-_MERGE_CACHE = FitCache(scope_len=2)
 
 
 def _pair_counts(s_df: DataFrame) -> DataFrame:
@@ -71,6 +67,7 @@ def _token_total(s_df: DataFrame) -> int:
     return s_df.select(F.sum(F.size(toks)).alias("n")).collect()[0]["n"]
 
 
+@dataset_cached
 def _train_merges(spark: SparkSession, sf_dir: str) -> list[tuple]:
     """Run the ``BPE_ROUNDS`` training loop; return one
     (round, w1, w2, pair_count, tokens_after) tuple per executed round.
@@ -79,35 +76,30 @@ def _train_merges(spark: SparkSession, sf_dir: str) -> list[tuple]:
     must never re-run the iterative loop twice in one session. The cached
     value is a plain list (bounded: BPE_ROUNDS rows of short strings), so
     FitCache's best-effort unpersist is a no-op on eviction."""
-    key = (spark.sparkContext.applicationId, sf_dir, "bpe_merges")
+    docs = load_table(spark, sf_dir, "documents")
+    s_df = docs.select(
+        F.concat(F.lit(" "), F.concat_ws(" ", tokens_col()), F.lit(" ")).alias("s")
+    ).localCheckpoint(eager=True)
 
-    def build() -> list[tuple]:
-        docs = load_table(spark, sf_dir, "documents")
-        s_df = docs.select(
-            F.concat(F.lit(" "), F.concat_ws(" ", tokens_col()), F.lit(" ")).alias("s")
-        ).localCheckpoint(eager=True)
-
-        rows = []
-        for rnd in range(1, BPE_ROUNDS + 1):
-            top = (
-                _pair_counts(s_df)
-                .orderBy(F.col("c").desc(), F.col("w1").asc(), F.col("w2").asc())
-                .limit(1)
-                .collect()  # bounded: one row per round
-            )
-            if not top:  # corpus empty or no pairs left — nothing to merge
-                break
-            best = top[0]
-            w1, w2, c = best["w1"], best["w2"], best["c"]
-            s_df = s_df.select(
-                F.replace(
-                    F.col("s"), F.lit(f" {w1} {w2} "), F.lit(f" {w1}~{w2} ")
-                ).alias("s")
-            ).localCheckpoint(eager=True)  # truncate lineage each round
-            rows.append((rnd, w1, w2, c, _token_total(s_df)))
-        return rows
-
-    return _MERGE_CACHE.get_or_build(key, build)
+    rows = []
+    for rnd in range(1, BPE_ROUNDS + 1):
+        top = (
+            _pair_counts(s_df)
+            .orderBy(F.col("c").desc(), F.col("w1").asc(), F.col("w2").asc())
+            .limit(1)
+            .collect()  # bounded: one row per round
+        )
+        if not top:  # corpus empty or no pairs left — nothing to merge
+            break
+        best = top[0]
+        w1, w2, c = best["w1"], best["w2"], best["c"]
+        s_df = s_df.select(
+            F.replace(
+                F.col("s"), F.lit(f" {w1} {w2} "), F.lit(f" {w1}~{w2} ")
+            ).alias("s")
+        ).localCheckpoint(eager=True)  # truncate lineage each round
+        rows.append((rnd, w1, w2, c, _token_total(s_df)))
+    return rows
 
 
 def text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -397,30 +389,27 @@ SUBWORD_ROUNDS = 8
 _EOW = "</w>"  # end-of-word marker symbol (the paper's </w>)
 
 
+@dataset_cached
 def _word_counts(spark: SparkSession, sf_dir: str) -> dict:
     """Corpus word-frequency table (bounded by the word vocabulary) —
     the single scan every subword-family fit reduces to. Fit-cached so
     the subword/WordPiece/unigram trainers and the encoder's ranking pass
     share ONE aggregate per (session, dataset) instead of re-scanning."""
-    key = (spark.sparkContext.applicationId, sf_dir, "word_counts")
-
-    def build() -> dict:
-        docs = load_table(spark, sf_dir, "documents")
-        rows = (
-            docs.select(F.explode(tokens_col()).alias("w"))
-            .groupBy("w")
-            .agg(F.count("*").alias("wc"))
-            .collect()
-        )
-        return {r["w"]: int(r["wc"]) for r in rows}
-
-    return _MERGE_CACHE.get_or_build(key, build)
+    docs = load_table(spark, sf_dir, "documents")
+    rows = (
+        docs.select(F.explode(tokens_col()).alias("w"))
+        .groupBy("w")
+        .agg(F.count("*").alias("wc"))
+        .collect()
+    )
+    return {r["w"]: int(r["wc"]) for r in rows}
 
 
 def _spell(word: str) -> str:
     return " " + " ".join(word) + f" {_EOW} "
 
 
+@dataset_cached
 def _train_subword(spark: SparkSession, sf_dir: str):
     """Fit the subword merge table. Returns (merge_rows, spell) where
     merge_rows = [(round, left, right, merged, pair_count, symbols_after)]
@@ -429,29 +418,24 @@ def _train_subword(spark: SparkSession, sf_dir: str):
     the same literal left-to-right non-overlapping replace as the
     word-level loop (" a b " -> " ab "), so the unrolled DuckDB oracle is
     exact by the identical-replace-semantics argument."""
-    key = (spark.sparkContext.applicationId, sf_dir, "bpe_subword")
-
-    def build():
-        words = _word_counts(spark, sf_dir)
-        spelled = {w: _spell(w) for w in words}
-        merges = []
-        for rnd in range(1, SUBWORD_ROUNDS + 1):
-            counts: dict[tuple, int] = {}
-            for w, s in spelled.items():
-                syms = s.split()
-                for a, b in zip(syms, syms[1:]):
-                    counts[(a, b)] = counts.get((a, b), 0) + words[w]
-            if not counts:
-                break
-            (a, b), c = min(counts.items(), key=lambda kv: (-kv[1], kv[0]))
-            spelled = {
-                w: s.replace(f" {a} {b} ", f" {a}{b} ") for w, s in spelled.items()
-            }
-            n_after = sum(words[w] * len(s.split()) for w, s in spelled.items())
-            merges.append((rnd, a, b, a + b, c, n_after))
-        return merges, {w: s.split() for w, s in spelled.items()}
-
-    return _MERGE_CACHE.get_or_build(key, build)
+    words = _word_counts(spark, sf_dir)
+    spelled = {w: _spell(w) for w in words}
+    merges = []
+    for rnd in range(1, SUBWORD_ROUNDS + 1):
+        counts: dict[tuple, int] = {}
+        for w, s in spelled.items():
+            syms = s.split()
+            for a, b in zip(syms, syms[1:]):
+                counts[(a, b)] = counts.get((a, b), 0) + words[w]
+        if not counts:
+            break
+        (a, b), c = min(counts.items(), key=lambda kv: (-kv[1], kv[0]))
+        spelled = {
+            w: s.replace(f" {a} {b} ", f" {a}{b} ") for w, s in spelled.items()
+        }
+        n_after = sum(words[w] * len(s.split()) for w, s in spelled.items())
+        merges.append((rnd, a, b, a + b, c, n_after))
+    return merges, {w: s.split() for w, s in spelled.items()}
 
 
 def text_bpe_subword_train(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -689,44 +673,40 @@ TEXT_BPE_SUBWORD_ENCODE_SQL = _bpe_subword_encode_sql()
 # Spark-driver Python and the DuckDB oracle.
 
 
+@dataset_cached
 def _train_wordpiece(spark: SparkSession, sf_dir: str):
     """Fit the WordPiece merge table; returns (merge_rows, spell) with
     merge_rows = [(round, left, right, merged, pair_count, score,
     symbols_after)]. Same vocab-bounded word-frequency formulation and
     fit-cache discipline as `_train_subword`."""
-    key = (spark.sparkContext.applicationId, sf_dir, "wordpiece")
-
-    def build():
-        words = _word_counts(spark, sf_dir)
-        spelled = {w: _spell(w) for w in words}
-        merges = []
-        for rnd in range(1, SUBWORD_ROUNDS + 1):
-            counts: dict[tuple, int] = {}
-            sym_counts: dict[str, int] = {}
-            for w, s in spelled.items():
-                syms = s.split()
-                for sym in syms:
-                    sym_counts[sym] = sym_counts.get(sym, 0) + words[w]
-                for a, b in zip(syms, syms[1:]):
-                    counts[(a, b)] = counts.get((a, b), 0) + words[w]
-            if not counts:
-                break
-            (a, b), c = min(
-                counts.items(),
-                key=lambda kv: (
-                    -(kv[1] / (sym_counts[kv[0][0]] * sym_counts[kv[0][1]])),
-                    kv[0],
-                ),
-            )
-            score = c / (sym_counts[a] * sym_counts[b])
-            spelled = {
-                w: s.replace(f" {a} {b} ", f" {a}{b} ") for w, s in spelled.items()
-            }
-            n_after = sum(words[w] * len(s.split()) for w, s in spelled.items())
-            merges.append((rnd, a, b, a + b, c, score, n_after))
-        return merges, {w: s.split() for w, s in spelled.items()}
-
-    return _MERGE_CACHE.get_or_build(key, build)
+    words = _word_counts(spark, sf_dir)
+    spelled = {w: _spell(w) for w in words}
+    merges = []
+    for rnd in range(1, SUBWORD_ROUNDS + 1):
+        counts: dict[tuple, int] = {}
+        sym_counts: dict[str, int] = {}
+        for w, s in spelled.items():
+            syms = s.split()
+            for sym in syms:
+                sym_counts[sym] = sym_counts.get(sym, 0) + words[w]
+            for a, b in zip(syms, syms[1:]):
+                counts[(a, b)] = counts.get((a, b), 0) + words[w]
+        if not counts:
+            break
+        (a, b), c = min(
+            counts.items(),
+            key=lambda kv: (
+                -(kv[1] / (sym_counts[kv[0][0]] * sym_counts[kv[0][1]])),
+                kv[0],
+            ),
+        )
+        score = c / (sym_counts[a] * sym_counts[b])
+        spelled = {
+            w: s.replace(f" {a} {b} ", f" {a}{b} ") for w, s in spelled.items()
+        }
+        n_after = sum(words[w] * len(s.split()) for w, s in spelled.items())
+        merges.append((rnd, a, b, a + b, c, score, n_after))
+    return merges, {w: s.split() for w, s in spelled.items()}
 
 
 def text_wordpiece_train(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -881,39 +861,35 @@ def _uni_viterbi(word: str, p: dict[str, float]) -> list[str]:
     return toks[::-1]
 
 
+@dataset_cached
 def _train_unigram(spark: SparkSession, sf_dir: str):
     """Fit the unigram LM. Returns (usage, spell): final per-token weighted
     usage counts (the model numerators; total = their sum) and each corpus
     word's final-model Viterbi segmentation (the E-step of one more
     iteration, i.e. what encode applies). Vocab-bounded; fit-cached."""
-    key = (spark.sparkContext.applicationId, sf_dir, "unigram")
-
-    def build():
-        words = _word_counts(spark, sf_dir)
-        # seed: weighted substring-occurrence counts
-        usage: dict[str, int] = {}
-        for w, wc in words.items():
-            for i in range(len(w)):
-                for l in range(1, min(UNI_CAND_MAX, len(w) - i) + 1):
-                    t = w[i:i + l]
-                    usage[t] = usage.get(t, 0) + wc
-        for _it in range(UNI_EM_ITERS):
-            total = sum(usage.values())
-            p = {t: u / total for t, u in usage.items()}
-            nxt: dict[str, int] = {}
-            for w, wc in words.items():
-                for t in _uni_viterbi(w, p):
-                    nxt[t] = nxt.get(t, 0) + wc
-            # keep the full candidate support with zero counts: a token
-            # unused this E-step has p = 0 next round but remains a legal
-            # (score-zero) path, matching the oracle's LEFT-JOIN lookups
-            usage = {t: nxt.get(t, 0) for t in usage}
+    words = _word_counts(spark, sf_dir)
+    # seed: weighted substring-occurrence counts
+    usage: dict[str, int] = {}
+    for w, wc in words.items():
+        for i in range(len(w)):
+            for l in range(1, min(UNI_CAND_MAX, len(w) - i) + 1):
+                t = w[i:i + l]
+                usage[t] = usage.get(t, 0) + wc
+    for _it in range(UNI_EM_ITERS):
         total = sum(usage.values())
         p = {t: u / total for t, u in usage.items()}
-        spell = {w: _uni_viterbi(w, p) for w in words}
-        return words, usage, spell
-
-    return _MERGE_CACHE.get_or_build(key, build)
+        nxt: dict[str, int] = {}
+        for w, wc in words.items():
+            for t in _uni_viterbi(w, p):
+                nxt[t] = nxt.get(t, 0) + wc
+        # keep the full candidate support with zero counts: a token
+        # unused this E-step has p = 0 next round but remains a legal
+        # (score-zero) path, matching the oracle's LEFT-JOIN lookups
+        usage = {t: nxt.get(t, 0) for t in usage}
+    total = sum(usage.values())
+    p = {t: u / total for t, u in usage.items()}
+    spell = {w: _uni_viterbi(w, p) for w in words}
+    return words, usage, spell
 
 
 def text_unigram_train(spark: SparkSession, sf_dir: str) -> DataFrame:

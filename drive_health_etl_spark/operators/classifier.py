@@ -43,7 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from drive_health_etl_spark.operators.fitcache import FitCache
+from drive_health_etl_spark.operators.fitcache import dataset_cached
 from drive_health_etl_spark.operators.quality import (
     MAX_MEAN_WORD_LEN,
     MAX_WORDS,
@@ -154,20 +154,17 @@ def lr_train(spark: SparkSession, sf_dir: str, rounds: int = LR_ROUNDS) -> list[
 
 
 # Trained weights per (session, sf_dir): deterministic fit, shared by the
-# train-readout and eval queries (the _CENTROID_CACHE pattern).
-_LR_CACHE = FitCache()  # scope-LRU bounded
-
-
-def _lr_weights_cached(spark: SparkSession, sf_dir: str) -> list[float]:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    return _LR_CACHE.get_or_build(key, lambda: lr_train(spark, sf_dir))
+# train-readout and eval queries.
+@dataset_cached
+def _lr_weights(spark: SparkSession, sf_dir: str) -> list[float]:
+    return lr_train(spark, sf_dir)
 
 
 def quality_lr_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Readout of the trained quality classifier: one row per model term
     with its weight at 6 dp. The oracle re-trains the whole model in SQL
     and must match every weight."""
-    weights = _lr_weights_cached(spark, sf_dir)
+    weights = _lr_weights(spark, sf_dir)
     rows = [(t, w) for t, w in zip(_TERMS, weights)]
     # rounding happens IN-ENGINE (F.round = half-away, matching DuckDB
     # ROUND); Python round() is banker's and would diverge on exact ties
@@ -183,7 +180,7 @@ def quality_lr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     distribution. Predict keep iff z > 0 (sigma~ is monotone, so this is
     p > 0.5 without evaluating the sigmoid; z is engine-exact so the
     threshold compare is too)."""
-    weights = _lr_weights_cached(spark, sf_dir)
+    weights = _lr_weights(spark, sf_dir)
     feats = _features(spark, sf_dir)
     scored = feats.select("y", (_z_col(weights) > 0).cast("int").alias("pred"))
     return scored.agg(
@@ -360,9 +357,7 @@ FT_BUCKETS = 512  # hashed bins: 40-word synthetic vocab + ~1.6k bigrams
 # (measured: D=256 -> 0.984 accuracy, D=512 -> 0.996)
 
 
-_FT_DB_CACHE = FitCache()  # keys (appId, sf_dir); scope-LRU bounded
-
-
+@dataset_cached
 def _ft_db(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, y, b, c): per-doc hashed-gram bucket counts with the
     stopword-rule label carried through the explode (no doc-keyed join).
@@ -370,11 +365,6 @@ def _ft_db(spark: SparkSession, sf_dir: str) -> DataFrame:
     (session, dataset) — FOUR registry queries (ft_train/eval/calibration/
     histcal) each re-ran the identical fit scan + checkpoint; the bucket
     counts are a fitted artifact exactly like the LR weights above."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    return _FT_DB_CACHE.get_or_build(key, lambda: _build_ft_db(spark, sf_dir))
-
-
-def _build_ft_db(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import ArrayType, StringType
 
     docs = load_table(spark, sf_dir, "documents").repartition(

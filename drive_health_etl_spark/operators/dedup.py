@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from drive_health_etl_spark.operators.fitcache import FitCache
+from drive_health_etl_spark.operators.fitcache import dataset_cached
 from drive_health_etl_spark.operators.text import TOKENS_SQL, tokens_col
 from drive_health_etl_spark.sources.tables import load_table
 
@@ -119,16 +119,9 @@ FROM documents GROUP BY 1
 # per query dominated the driver-contract runtime; one persisted copy per
 # (session, sf_dir) amortizes it. Testdata is immutable, so staleness is not
 # a concern; memory cost is one (doc_id, 8 longs) row per document.
-# Scope-LRU bounded (fitcache.FitCache): a long-lived driver sweeping many
-# sf_dirs sheds whole past datasets, unpersisting their blocks on evict.
-_SUBTREE_CACHE = FitCache(scope_len=2)
-
-
-def _cached(spark: SparkSession, sf_dir: str, what: str, build) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, what)
-    return _SUBTREE_CACHE.get_or_build(key, lambda: build().persist())
-
-
+# Every such subtree below is a @dataset_cached builder that persists its
+# relation; the store sheds whole past datasets, unpersisting on evict.
+@dataset_cached
 def _shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document distinct 3-gram shingle sets, built ONCE per
     (session, sf_dir) via the family subtree cache — the tokenize+shingle
@@ -148,21 +141,25 @@ def _shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # `source`. Carry a null source for the bare shape so the shared relation
     # keeps one schema either way.
     src = F.col("source") if "source" in docs.columns else F.lit(None).cast("string")
-    return _cached(
-        spark,
-        sf_dir,
-        "sh_sets",
-        lambda: docs.withColumn("toks", tokens_col())
+    return (
+        docs.withColumn("toks", tokens_col())
         .select("doc_id", src.alias("source"), F.array_distinct(shingles_col()).alias("sh_set"))
-        .filter(F.size("sh_set") > 0),
+        .filter(F.size("sh_set") > 0)
+        .persist()
     )
 
 
+@dataset_cached
 def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document MinHash signature (8 hash functions over the 3-gram
     shingle set). Explode + 8 min-aggs: one shuffle on doc_id with map-side
     partial mins — signature computation is linear in corpus size."""
-    return _cached(spark, sf_dir, "sigs", lambda: _build_minhash_signatures(spark, sf_dir))
+    # Repartition after the single-file scan so the shingle hashing runs on
+    # all cores, not the one scan partition.
+    docs = load_table(spark, sf_dir, "documents").repartition(
+        spark.sparkContext.defaultParallelism
+    )
+    return signatures_for(docs).persist()
 
 
 def signatures_for(docs: DataFrame) -> DataFrame:
@@ -193,15 +190,6 @@ def band_keys(sigs: DataFrame) -> DataFrame:
             )
         ).alias("bs"),
     ).select("doc_id", "bs.band", "bs.h1", "bs.h2")
-
-
-def _build_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Repartition after the single-file scan so the shingle hashing runs on
-    # all cores, not the one scan partition.
-    docs = load_table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
-    return signatures_for(docs)
 
 
 MINHASH_SIG_SQL = f"""
@@ -244,6 +232,7 @@ def _lsh_buckets(sigs: DataFrame) -> DataFrame:
     )
 
 
+@dataset_cached
 def dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH candidate pairs: docs agreeing on any band of 2 consecutive
     minhashes. Scale path: explode signatures into (band_idx, h1, h2) keys,
@@ -251,7 +240,7 @@ def dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash, never a cross join. Buckets are truncated at BUCKET_CAP docs
     (sorted, so truncation is deterministic). Output: distinct
     (doc_a, doc_b), doc_a < doc_b."""
-    return _cached(spark, sf_dir, "pairs", lambda: _build_minhash_pairs(spark, sf_dir))
+    return _build_minhash_pairs(spark, sf_dir).persist()
 
 
 def _build_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -753,6 +742,7 @@ _EVAL_N = 250  # fixed evaluation subset -> bounded all-pairs at any SF; the
 _EVAL_TAU = 0.5  # "true near-dup" ground-truth threshold
 
 
+@dataset_cached
 def _eval_shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shingle sets of the _EVAL_N-doc evaluation subset ONLY, as its own
     small cached relation. r12 (VERDICT r11 item 7): the audits previously
@@ -763,19 +753,18 @@ def _eval_shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan (PushedFilters), and the per-row transforms are identical to
     `_shingle_sets` (filter-then-shingle == shingle-then-filter row-wise),
     so every consumer's rows are unchanged."""
-    return _cached(
-        spark,
-        sf_dir,
-        "eval_sh_sets",
-        lambda: load_table(spark, sf_dir, "documents")
+    return (
+        load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") < _EVAL_N)
         .repartition(spark.sparkContext.defaultParallelism)
         .withColumn("toks", tokens_col())
         .select("doc_id", F.array_distinct(shingles_col()).alias("sh_set"))
-        .filter(F.size("sh_set") > 0),
+        .filter(F.size("sh_set") > 0)
+        .persist()
     )
 
 
+@dataset_cached
 def _eval_pair_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared-shingle pair overlap stats on the fixed evaluation subset:
     (doc_a, doc_b, n_inter, na, nb) for every subset pair sharing >= 1
@@ -787,26 +776,22 @@ def _eval_pair_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     it once (measured 2.86 + 2.04 + 1.65 s isolated full-run costs, the
     subtree being the dominant share of each). Bounded: the subset is
     _EVAL_N docs, so the relation is at most C(_EVAL_N, 2) slim rows."""
-
-    def build() -> DataFrame:
-        sets_df = _eval_shingle_sets(spark, sf_dir)
-        sh = sets_df.select("doc_id", F.explode("sh_set").alias("shingle")).distinct()
-        a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
-        b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
-        inter = (
-            a.join(b, "shingle")
-            .filter(F.col("doc_a") < F.col("doc_b"))
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count("*").alias("n_inter"))
-        )
-        sizes = sets_df.select("doc_id", F.size("sh_set").alias("n_sh"))
-        return inter.join(
-            sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na")), "doc_a"
-        ).join(
-            sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb")), "doc_b"
-        )
-
-    return _cached(spark, sf_dir, "eval_pair_overlap", build)
+    sets_df = _eval_shingle_sets(spark, sf_dir)
+    sh = sets_df.select("doc_id", F.explode("sh_set").alias("shingle")).distinct()
+    a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
+    b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
+    inter = (
+        a.join(b, "shingle")
+        .filter(F.col("doc_a") < F.col("doc_b"))
+        .groupBy("doc_a", "doc_b")
+        .agg(F.count("*").alias("n_inter"))
+    )
+    sizes = sets_df.select("doc_id", F.size("sh_set").alias("n_sh"))
+    return inter.join(
+        sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na")), "doc_a"
+    ).join(
+        sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb")), "doc_b"
+    ).persist()
 
 
 def dedup_lsh_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1339,8 +1324,6 @@ FROM toks t LEFT JOIN keptagg k USING (doc_id)
 _VOCAB_BROADCAST_MAX = 2_000_000  # distinct shingles above which the df map
 # is too big to force-broadcast (~64 MB at ~32 B/shingle) — AQE decides
 
-_VOCAB_SIZE_CACHE: dict[tuple[str, str], int] = {}  # (appId, sf_dir) -> |vocab|
-
 _PREFIX_T = 0.7  # Jaccard threshold: prefix filtering pays off at HIGH
 # thresholds (prefix length = n - ceil(t*n) + 1 ~ (1-t)*n). Measured on this
 # corpus (template-heavy docs, so even rare shingles are shared): t=0.2 ->
@@ -1353,6 +1336,17 @@ _COUNT_FILTER_BUCKETS = 64  # count-filter histogram width (engine-side
 # pruning only — never part of the oracle contract)
 
 
+@dataset_cached
+def _vocab_size(spark: SparkSession, sf_dir: str) -> int:
+    """Distinct shingles of the corpus (one cheap agg over the persisted
+    shingle sets)."""
+    return (
+        _shingle_sets(spark, sf_dir).select(F.explode("sh_set").alias("shingle"))
+        .distinct().count()
+    )
+
+
+@dataset_cached
 def _prefix_pre(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The rarity-ordered prefix relation (doc_id, n, shingle, pos), cached
     per (session, dataset). r12 (guide §2.4, the LSH-audit lesson): the
@@ -1364,45 +1358,37 @@ def _prefix_pre(spark: SparkSession, sf_dir: str) -> DataFrame:
     repeat calls. Deterministic: (df asc, shingle asc) is a total order.
     Size: ~(1 - t) of corpus shingle instances + one row per doc, slimmer
     than the shingle-set relation it derives from."""
-
-    def build() -> DataFrame:
-        sets_df = _shingle_sets(spark, sf_dir)
-        ex = sets_df.select(
-            "doc_id", F.size("sh_set").alias("n"), F.explode("sh_set").alias("shingle")
+    ex = _shingle_sets(spark, sf_dir).select(
+        "doc_id", F.size("sh_set").alias("n"), F.explode("sh_set").alias("shingle")
+    )
+    freq = ex.groupBy("shingle").agg(F.count("*").alias("df"))
+    # The rarity order only needs to be a TOTAL order both engines agree
+    # on — (df asc, shingle asc) is one, used directly as the per-doc
+    # window key. Materializing a global dense rank would mean a
+    # single-partition sort of the whole vocabulary: a scale killer the
+    # tuple key avoids.
+    w = Window.partitionBy("doc_id").orderBy(F.col("df").asc(), F.col("shingle").asc())
+    # The df map is vocab-sized: broadcast is a win while the vocabulary
+    # fits an executor (~64 MB at the 2M-shingle threshold), but at
+    # 100 TB with an open vocabulary a FORCED broadcast would blow past
+    # broadcast limits — so the hint is conditional on a measured
+    # distinct-shingle count (one cheap agg over the already-persisted
+    # sets, cached per (session, dataset)); above the threshold the
+    # equi-join stays keyed and AQE picks the strategy.
+    freq_j = F.broadcast(freq) if _vocab_size(spark, sf_dir) <= _VOCAB_BROADCAST_MAX else freq
+    return (
+        ex.join(freq_j, "shingle")
+        .withColumn("pos", F.row_number().over(w))
+        .filter(
+            F.col("pos")
+            <= F.col("n") - F.ceil(F.lit(_PREFIX_T) * F.col("n")) + F.lit(1)
         )
-        freq = ex.groupBy("shingle").agg(F.count("*").alias("df"))
-        # The rarity order only needs to be a TOTAL order both engines agree
-        # on — (df asc, shingle asc) is one, used directly as the per-doc
-        # window key. Materializing a global dense rank would mean a
-        # single-partition sort of the whole vocabulary: a scale killer the
-        # tuple key avoids.
-        w = Window.partitionBy("doc_id").orderBy(F.col("df").asc(), F.col("shingle").asc())
-        # The df map is vocab-sized: broadcast is a win while the vocabulary
-        # fits an executor (~64 MB at the 2M-shingle threshold), but at
-        # 100 TB with an open vocabulary a FORCED broadcast would blow past
-        # broadcast limits — so the hint is conditional on a measured
-        # distinct-shingle count (one cheap agg over the already-persisted
-        # sets, cached per (app, dataset)); above the threshold the
-        # equi-join stays keyed and AQE picks the strategy.
-        vkey = (spark.sparkContext.applicationId, sf_dir)
-        n_vocab = _VOCAB_SIZE_CACHE.get(vkey)
-        if n_vocab is None:
-            n_vocab = freq.count()
-            _VOCAB_SIZE_CACHE[vkey] = n_vocab
-        freq_j = F.broadcast(freq) if n_vocab <= _VOCAB_BROADCAST_MAX else freq
-        return (
-            ex.join(freq_j, "shingle")
-            .withColumn("pos", F.row_number().over(w))
-            .filter(
-                F.col("pos")
-                <= F.col("n") - F.ceil(F.lit(_PREFIX_T) * F.col("n")) + F.lit(1)
-            )
-            .select("doc_id", "n", "shingle", "pos")
-        )
-
-    return _cached(spark, sf_dir, "prefix_pre", build)
+        .select("doc_id", "n", "shingle", "pos")
+        .persist()
+    )
 
 
+@dataset_cached
 def _prefix_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The count-filter histograms (doc_id, n, cnt), cached per (session,
     dataset). r12: both candidate sides attached this relation, and the old
@@ -1411,22 +1397,19 @@ def _prefix_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle into an int array and the B bucket counts scan ints
     (mathematically the same counts, so the pruning decisions — engine-side
     only, never oracle-visible — are unchanged)."""
-
-    def build() -> DataFrame:
-        hashed = F.expr(
-            f"transform(sh_set, s -> pmod(xxhash64(s), {_COUNT_FILTER_BUCKETS}))"
-        )
-        cnt = F.expr(
-            f"transform(sequence(0, {_COUNT_FILTER_BUCKETS - 1}), b ->"
-            f" size(filter(hashed, h -> h = b)))"
-        )
-        return (
-            _shingle_sets(spark, sf_dir)
-            .select("doc_id", F.size("sh_set").alias("n"), hashed.alias("hashed"))
-            .select("doc_id", "n", cnt.alias("cnt"))
-        )
-
-    return _cached(spark, sf_dir, "prefix_sketch", build)
+    hashed = F.expr(
+        f"transform(sh_set, s -> pmod(xxhash64(s), {_COUNT_FILTER_BUCKETS}))"
+    )
+    cnt = F.expr(
+        f"transform(sequence(0, {_COUNT_FILTER_BUCKETS - 1}), b ->"
+        f" size(filter(hashed, h -> h = b)))"
+    )
+    return (
+        _shingle_sets(spark, sf_dir)
+        .select("doc_id", F.size("sh_set").alias("n"), hashed.alias("hashed"))
+        .select("doc_id", "n", cnt.alias("cnt"))
+        .persist()
+    )
 
 
 def dedup_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2051,6 +2034,26 @@ _LCS_ONESHOT_ROWS = 64_000_000
 _LCS_ONESHOT_CHARS = 500_000_000
 
 
+@dataset_cached
+def _lcs_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, text, n): the persisted document relation the LCS search
+    probes."""
+    return (
+        load_table(spark, sf_dir, "documents")
+        .repartition(spark.sparkContext.defaultParallelism)
+        .select("doc_id", "text", F.length("text").alias("n"))
+        .persist()
+    )
+
+
+@dataset_cached
+def _lcs_stats(spark: SparkSession, sf_dir: str) -> tuple[int, int]:
+    """(max document length, document count) — a dataset property like the
+    cached docs relation itself, so warm calls skip the stats job."""
+    max_n, n_docs = _lcs_docs(spark, sf_dir).agg(F.max("n"), F.count("*")).first()
+    return (max_n or 0), n_docs
+
+
 def dedup_suffix_lcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT longest cross-document repeated substring — the unbounded-k
     completion of the suffix-rank family (`dedup_suffix_doubling` caps its
@@ -2109,21 +2112,8 @@ def dedup_suffix_lcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle-joins above. Nothing is quadratic: candidate positions bound
     the work, never document pairs, and rung fingerprints hash at most
     2 * {_LCS_RUNG_CAP} chars per position regardless of document length."""
-    docs = _cached(
-        spark,
-        sf_dir,
-        "lcs_docs",
-        lambda: load_table(spark, sf_dir, "documents")
-        .repartition(spark.sparkContext.defaultParallelism)
-        .select("doc_id", "text", F.length("text").alias("n")),
-    )
-    # corpus stats are a dataset property like the cached docs relation
-    # itself: fit-cache them so warm calls skip the stats job
-    stats = _SUBTREE_CACHE.get_or_build(
-        (spark.sparkContext.applicationId, sf_dir, "lcs_stats"),
-        lambda: tuple(docs.agg(F.max("n"), F.count("*")).first()),
-    )
-    max_n, n_docs = (stats[0] or 0), stats[1]
+    docs = _lcs_docs(spark, sf_dir)
+    max_n, n_docs = _lcs_stats(spark, sf_dir)
     empty = spark.createDataFrame(
         [(0, 0, 0)], "lcs_len int, n_repeats bigint, n_docs bigint"
     )
@@ -2496,6 +2486,88 @@ _EDJ_BCAST_DOCS = 500_000  # broadcast the (K+1)-chunks/doc signature below
 # plain int64 equi-join — one shuffle, no driver pressure.
 
 
+@dataset_cached
+def _edj_ndocs(spark: SparkSession, sf_dir: str) -> int:
+    return load_table(spark, sf_dir, "documents").count()
+
+
+# Family subtree cache (not a bare per-call persist): repeated calls in
+# one session must REUSE the materialized gram relation — stacking a
+# fresh persist per call churns the block store at sf1 (measured:
+# second warm call 2x slower than the first).
+# Docs shorter than Q have NO q-grams: their gram array is empty and
+# ng = 0 <= Q*K, so they route into the length-bucketed brute branch
+# of `dedup_edit_join` (never silently dropped — their only possible
+# partners have n <= (q-1)+K, hence ng <= K <= Q*K, so every partner is
+# in the brute set too and completeness holds independent of the
+# adaptive Q).
+@dataset_cached
+def _edj_grams(spark: SparkSession, sf_dir: str, q: int) -> DataFrame:
+    """(doc_id, text, n, grams, ng): each doc's distinct Q-gram hashes."""
+    return (
+        load_table(spark, sf_dir, "documents")
+        .repartition(spark.sparkContext.defaultParallelism)
+        .select("doc_id", "text", F.length("text").alias("n"))
+        .withColumn(
+            "grams",
+            F.expr(
+                f"if(length(text) >= {q},"
+                f" array_distinct(transform(sequence(1, length(text) - {q} + 1),"
+                f" i -> xxhash64(substring(text, i, {q})))),"
+                f" cast(array() as array<bigint>))"
+            ),
+        )
+        .withColumn("ng", F.size("grams"))
+        .persist()
+    )
+
+
+# Signature: the K+1 rarest full Q-chunks per doc (docs with
+# n >= (K+1)*Q — everything smaller is brute-set by the ng <= Q*K test
+# in `dedup_edit_join`). Chunk hashes are also gram hashes of the same
+# doc, so rarity comes from the gram df relation; the rarest-(K+1)
+# selection is a per-doc slice(array_sort(collect_list)) hash
+# aggregate over <= n/Q structs — no window, no partition-wide sort.
+# The gram document-frequency aggregate (a full gram-instance
+# shuffle) and this signature are dataset artifacts like the gram
+# relation itself — cached per (session, dataset, Q), so repeat calls
+# pay only the candidate probe + verify.
+@dataset_cached
+def _edj_sig(spark: SparkSession, sf_dir: str, q: int) -> DataFrame:
+    """(doc_a, la, c): the flattened K+1 rarest-chunk signature per doc."""
+    k = _EDJ_K
+    docs = _edj_grams(spark, sf_dir, q)
+    g = docs.select("doc_id", "n", F.explode("grams").alias("g"))
+    freq = g.groupBy("g").agg(F.count("*").alias("df"))
+    ch = docs.filter(F.col("n") >= (k + 1) * q).select(
+        "doc_id",
+        "n",
+        F.explode(
+            F.expr(
+                f"transform(sequence(0, n div {q} - 1),"
+                f" j -> xxhash64(substring(text, 1 + j * {q}, {q})))"
+            )
+        ).alias("c"),
+    )
+    sig = (
+        ch.join(freq, ch["c"] == freq["g"])
+        .groupBy("doc_id")
+        .agg(
+            F.first("n").alias("n"),
+            F.slice(
+                F.array_sort(F.collect_list(F.struct("df", F.col("c").alias("c")))),
+                1,
+                k + 1,
+            ).alias("sc"),
+        )
+    )
+    return sig.select(
+        F.col("doc_id").alias("doc_a"),
+        F.col("n").alias("la"),
+        F.explode("sc.c").alias("c"),
+    ).persist()
+
+
 def dedup_edit_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT edit-distance similarity self-join (the Ed-Join family: Xiao,
     Wang & Lin VLDB'08 prefix filtering over q-grams; Gravano et al.
@@ -2560,81 +2632,10 @@ def dedup_edit_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     <= n/Q structs — a hash aggregate, never a partition-wide sort. The
     brute branch is banded by length bucket, never all-pairs."""
     k = _EDJ_K
-    n_key = (spark.sparkContext.applicationId, sf_dir)
-    n_docs = _VOCAB_SIZE_CACHE.get(("edj_ndocs",) + n_key)
-    if n_docs is None:
-        n_docs = load_table(spark, sf_dir, "documents").count()
-        _VOCAB_SIZE_CACHE[("edj_ndocs",) + n_key] = n_docs
+    n_docs = _edj_ndocs(spark, sf_dir)
     q = _EDJ_Q_BIG if n_docs > _EDJ_BIG_DOCS else _EDJ_Q
-    # Family subtree cache (not a bare per-call persist): repeated calls in
-    # one session must REUSE the materialized gram relation — stacking a
-    # fresh persist per call churns the block store at sf1 (measured:
-    # second warm call 2x slower than the first).
-    # Docs shorter than Q have NO q-grams: their gram array is empty and
-    # ng = 0 <= Q*K, so they route into the length-bucketed brute branch
-    # below (never silently dropped — their only possible partners have
-    # n <= (q-1)+K, hence ng <= K <= Q*K, so every partner is in the brute
-    # set too and completeness holds independent of the adaptive Q).
-    docs = _cached(
-        spark,
-        sf_dir,
-        f"edj_grams_q{q}",
-        lambda: load_table(spark, sf_dir, "documents")
-        .repartition(spark.sparkContext.defaultParallelism)
-        .select("doc_id", "text", F.length("text").alias("n"))
-        .withColumn(
-            "grams",
-            F.expr(
-                f"if(length(text) >= {q},"
-                f" array_distinct(transform(sequence(1, length(text) - {q} + 1),"
-                f" i -> xxhash64(substring(text, i, {q})))),"
-                f" cast(array() as array<bigint>))"
-            ),
-        )
-        .withColumn("ng", F.size("grams")),
-    )
-    # Signature: the K+1 rarest full Q-chunks per doc (docs with
-    # n >= (K+1)*Q — everything smaller is brute-set by the ng <= Q*K test
-    # below, see docstring). Chunk hashes are also gram hashes of the same
-    # doc, so rarity comes from the gram df relation; the rarest-(K+1)
-    # selection is a per-doc slice(array_sort(collect_list)) hash
-    # aggregate over <= n/Q structs — no window, no partition-wide sort.
-    # r12: the gram document-frequency aggregate (a full gram-instance
-    # shuffle) and this signature are dataset artifacts like the gram
-    # relation itself — cached per (session, dataset, Q), so repeat calls
-    # pay only the candidate probe + verify.
-    def build_sig() -> DataFrame:
-        g = docs.select("doc_id", "n", F.explode("grams").alias("g"))
-        freq = g.groupBy("g").agg(F.count("*").alias("df"))
-        ch = docs.filter(F.col("n") >= (k + 1) * q).select(
-            "doc_id",
-            "n",
-            F.explode(
-                F.expr(
-                    f"transform(sequence(0, n div {q} - 1),"
-                    f" j -> xxhash64(substring(text, 1 + j * {q}, {q})))"
-                )
-            ).alias("c"),
-        )
-        sig = (
-            ch.join(freq, ch["c"] == freq["g"])
-            .groupBy("doc_id")
-            .agg(
-                F.first("n").alias("n"),
-                F.slice(
-                    F.array_sort(F.collect_list(F.struct("df", F.col("c").alias("c")))),
-                    1,
-                    k + 1,
-                ).alias("sc"),
-            )
-        )
-        return sig.select(
-            F.col("doc_id").alias("doc_a"),
-            F.col("n").alias("la"),
-            F.explode("sc.c").alias("c"),
-        )
-
-    sig_flat = _cached(spark, sf_dir, f"edj_sig_q{q}", build_sig)
+    docs = _edj_grams(spark, sf_dir, q)
+    sig_flat = _edj_sig(spark, sf_dir, q)
     # Candidate join: every doc's gram relation probes the signature. The
     # signature is K+1 slim rows per doc — broadcastable until the corpus
     # is huge, after which a plain equi-join on the int64 hash (one

@@ -1,42 +1,56 @@
-"""Bounded, scope-LRU cache for per-(session, dataset) fit subtrees.
+"""One bounded, scope-LRU store for per-(session, dataset) artifacts.
 
-VERDICT r8 item 7: module-global dicts keyed by (applicationId, sf_dir)
-held persisted DataFrames (minhash signatures, weighted edge lists, media
-fixtures) with no eviction — fine for a test harness, but a long-lived
-driver that sweeps many sf_dirs accumulates pinned storage blocks without
-bound. ``FitCache`` bounds the number of live SCOPES — an
-(applicationId, sf_dir) pair — not entries: one dataset legitimately owns
-several subtree entries at once (shingle sets, gram relations, signatures,
-codebooks) and they must never evict each other mid-query; what a
-long-lived driver must shed is whole datasets it has moved past. When the
-scope bound is exceeded, every entry of the least-recently-touched scope is
-dropped and its DataFrames unpersisted (best-effort: a stopped session's
-handles are dead and its storage died with the JVM).
+Query operators fit artifacts from a dataset (minhash signatures, k-means
+centroids, BPE merge tables, weighted edge lists, codec fixtures) and reuse
+them across the registry queries of one session. ``@dataset_cached`` is the
+one way to do that. It wraps a builder ``f(spark, sf_dir, *params)`` and
+keys its result on
 
-Thread safety (ADVICE r9, medium): the module-global caches this backs are
-hit concurrently by ``tools/vanilla_rehearsal.py``'s ThreadPoolExecutor
-pools, so ``touch``'s check-then-remove/append on the LRU list and the
-eviction's iteration over the dict raced (list.remove ValueError /
-"dict changed size during iteration"). All mutating paths now hold one
-re-entrant lock. ``get_or_build`` deliberately builds OUTSIDE the lock —
-fit subtrees can take seconds to materialize and must not serialize the
-rehearsal pool — and resolves the build race by keeping the first value
-stored and unpersisting the loser.
+    (applicationId, sf_dir, f.__module__ + "." + f.__qualname__, params)
 
-A ``dict`` subclass on purpose: ``tools/scale_probe.py`` purges any
-module-global ``*_CACHE`` dict via plain ``.clear()`` when recycling
-sessions, and that must keep working unchanged (clear drops references
-without unpersisting — correct there, since the owning JVM is going away).
+with ``params`` bound against ``f``'s signature after defaults are applied,
+so ``_centroids(spark, sf)`` and ``_centroids(spark, sf, k=N_CELLS)`` share
+one entry. Reuse is sound only when the key covers everything the result
+depends on, so a param must be a str, int, float, bool or None; anything
+else raises ``TypeError``. (A pyspark DataFrame hashes by identity, so a
+``hash()`` check would let it through.) Builders therefore never take a
+threaded-in relation: they derive their inputs from ``(spark, sf_dir)`` by
+calling other cached functions. Each builder picks its own materialization
+(``persist()``, ``localCheckpoint()`` or a plain Python value).
+
+All entries live in one ``FitCache``, ``STORE``. It bounds the number of
+live SCOPES, an (applicationId, sf_dir) pair, not entries: one dataset owns
+several entries at once (shingle sets, signatures, codebooks) and they must
+never evict each other mid-query; what a long-lived driver must shed is
+whole datasets it has moved past. When the scope bound is exceeded, every
+entry of the least-recently-touched scope is dropped and its DataFrames
+unpersisted.
+
+PySpark allows one live SparkContext per process, so an entry under any
+other applicationId belongs to a stopped session. Every cached call first
+drops those entries (best-effort unpersist: a stopped session's handles are
+dead and its storage died with the JVM).
+
+Thread safety: ``tools/vanilla_rehearsal.py``'s thread pools hit the store
+concurrently, so every mutating path holds one re-entrant lock.
+``get_or_build`` deliberately builds OUTSIDE the lock (a fit can take
+seconds and must not serialize the pool) and resolves the build race by
+keeping the first value stored and unpersisting the loser.
 """
 
 from __future__ import annotations
 
+import functools
+import inspect
 import threading
 
-# Live (applicationId, sf_dir) scopes kept per cache. 4 covers the standard
-# harness sweep (sf0.001 / sf0.01 / sf0.1 / sf1 in one session) without any
+# Live (applicationId, sf_dir) scopes kept. 4 covers the standard harness
+# sweep (sf0.001 / sf0.01 / sf0.1 / sf1 in one session) without any
 # eviction; a wider ad-hoc sweep starts shedding the oldest dataset's blocks.
 MAX_SCOPES = 4
+
+# Param types whose equality is value equality, so they can key an entry.
+_KEY_TYPES = (str, int, float, bool, type(None))
 
 
 def _try_unpersist(v) -> None:
@@ -55,22 +69,18 @@ def _try_unpersist(v) -> None:
 
 
 class FitCache(dict):
-    """dict with scope-LRU eviction. Keys are tuples whose first
-    ``scope_len`` elements identify the (session, dataset) scope."""
+    """dict with scope-LRU eviction. Keys are tuples whose first two
+    elements, (applicationId, sf_dir), identify the scope."""
 
-    def __init__(self, scope_len: int = 2, max_scopes: int = MAX_SCOPES,
-                 scope_of=None):
+    def __init__(self, max_scopes: int = MAX_SCOPES):
         super().__init__()
-        self._scope_len = scope_len
         self._max_scopes = max_scopes
-        self._scope_of = scope_of  # custom key -> scope extractor
         self._scope_order: list[tuple] = []  # LRU: most recently used last
         self._lock = threading.RLock()
 
-    def _scope(self, key: tuple) -> tuple:
-        if self._scope_of is not None:
-            return tuple(self._scope_of(key))
-        return tuple(key[: self._scope_len])
+    @staticmethod
+    def _scope(key: tuple) -> tuple:
+        return tuple(key[:2])
 
     def _drop_scope_if_empty(self, s: tuple) -> None:
         # Caller holds the lock. Keep _scope_order exact: a scope whose last
@@ -171,7 +181,38 @@ class FitCache(dict):
                 _try_unpersist(v)
         return len(removed)
 
-    def clear(self) -> None:  # scale_probe purge path: drop refs, no unpersist
+    def clear(self) -> None:  # session recycle: drop refs, no unpersist
         with self._lock:
             super().clear()
             self._scope_order.clear()
+
+
+STORE = FitCache()
+
+
+def dataset_cached(fn):
+    """Cache ``fn(spark, sf_dir, *params)`` in ``STORE`` per (session,
+    dataset, function, params); see the module docstring. The wrapper's
+    ``cache_clear()`` drops (and unpersists) this function's entries."""
+    sig = inspect.signature(fn)
+    name = f"{fn.__module__}.{fn.__qualname__}"
+
+    @functools.wraps(fn)
+    def cached(spark, sf_dir, *args, **kwargs):
+        bound = sig.bind(spark, sf_dir, *args, **kwargs)
+        bound.apply_defaults()
+        params = tuple(bound.arguments.values())[2:]
+        for p in params:
+            if not isinstance(p, _KEY_TYPES):
+                raise TypeError(
+                    f"{name}: a {type(p).__name__} param cannot key a dataset"
+                    " cache entry; derive it from (spark, sf_dir) instead"
+                )
+        app = spark.sparkContext.applicationId
+        STORE.purge(lambda k: k[0] != app)
+        return STORE.get_or_build(
+            (app, sf_dir, name, params), lambda: fn(spark, sf_dir, *args, **kwargs)
+        )
+
+    cached.cache_clear = lambda: STORE.purge(lambda k: k[2] == name)
+    return cached

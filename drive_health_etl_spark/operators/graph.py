@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from drive_health_etl_spark.operators.fitcache import FitCache
+from drive_health_etl_spark.operators.fitcache import dataset_cached
 from drive_health_etl_spark.session import shuffle_partitions
 from drive_health_etl_spark.sources.tables import load_table
 
@@ -35,9 +35,8 @@ PR_TOP_N = 20
 
 # The degree-weighted edge relation is the expensive subtree (self-join +
 # two distincts); a real deployment materializes the edge table once and
-# iterates over it — cache it per (app, sf_dir) the same way dedup.py caches
-# the MinHash signature subtree.
-_EDGE_CACHE = FitCache()  # scope-LRU bounded; unpersist-on-evict
+# iterates over it — cache it per (session, sf_dir) the same way dedup.py
+# caches the MinHash signature subtree.
 
 
 def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -84,23 +83,20 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@dataset_cached
 def _weighted_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-
-    def build() -> DataFrame:
-        edges = _edges(spark, sf_dir)
-        deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
-        # Fold 1/deg into the edge relation ONCE and localCheckpoint it:
-        # each iteration is then a single equi-join + aggregate over a
-        # lineage-free input (3 fewer stages per round than joining deg
-        # every time).
-        return edges.join(deg, "src").select(
-            "src", "dst", (F.lit(1.0) / F.col("deg")).alias("w")
-        ).localCheckpoint()
-
-    return _EDGE_CACHE.get_or_build(key, build)
+    edges = _edges(spark, sf_dir)
+    deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
+    # Fold 1/deg into the edge relation ONCE and localCheckpoint it:
+    # each iteration is then a single equi-join + aggregate over a
+    # lineage-free input (3 fewer stages per round than joining deg
+    # every time).
+    return edges.join(deg, "src").select(
+        "src", "dst", (F.lit(1.0) / F.col("deg")).alias("w")
+    ).localCheckpoint()
 
 
+@dataset_cached
 def _pagerank_nodes(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
     """(node set, node count) of the co-purchase graph — a dataset artifact
     like the weighted edge relation itself, cached per (session, sf_dir).
@@ -110,14 +106,9 @@ def _pagerank_nodes(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
     carry the narrow (node, r) pair instead of (node, n_nodes, r) — guide
     §2.3: shuffle fewer bytes, §2.4: don't re-shuffle what is already
     materialized."""
-
-    def build():
-        ed = _weighted_edges(spark, sf_dir)
-        nodes = ed.select(F.col("src").alias("node")).distinct().localCheckpoint()
-        return (nodes, nodes.count())
-
-    key = (spark.sparkContext.applicationId, sf_dir, "nodes")
-    return _EDGE_CACHE.get_or_build(key, build)
+    ed = _weighted_edges(spark, sf_dir)
+    nodes = ed.select(F.col("src").alias("node")).distinct().localCheckpoint()
+    return (nodes, nodes.count())
 
 
 # Broadcast the node-sized iteration relations (ranks in, contributions out)
@@ -317,32 +308,25 @@ def graph_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # The support-filtered pair relation is the expensive subtree (fact self-join
 # + aggregate) shared by the triangle census, BFS, and label propagation —
-# cache it per (app, sf_dir) like the pagerank edge list (a real deployment
-# materializes the edge table once and every graph job reads it).
-_SUPPORT_CACHE = FitCache()  # scope-LRU bounded; unpersist-on-evict
-
-
+# cache it per (session, sf_dir) like the pagerank edge list (a real
+# deployment materializes the edge table once and every graph job reads it).
+@dataset_cached
 def _support_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Undirected support-filtered co-purchase pairs (pa < pb), cached."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-
-    def build() -> DataFrame:
-        li = load_table(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_partkey"
-        ).distinct()
-        a = li.select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("pa"))
-        b = li.select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("pb"))
-        return (
-            a.join(b, "o")
-            .filter(F.col("pa") < F.col("pb"))
-            .groupBy("pa", "pb")
-            .agg(F.count("*").alias("support"))
-            .filter(F.col("support") >= _BFS_SUPPORT)
-            .select("pa", "pb")
-            .localCheckpoint()
-        )
-
-    return _SUPPORT_CACHE.get_or_build(key, build)
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_partkey"
+    ).distinct()
+    a = li.select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("pa"))
+    b = li.select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("pb"))
+    return (
+        a.join(b, "o")
+        .filter(F.col("pa") < F.col("pb"))
+        .groupBy("pa", "pb")
+        .agg(F.count("*").alias("support"))
+        .filter(F.col("support") >= _BFS_SUPPORT)
+        .select("pa", "pb")
+        .localCheckpoint()
+    )
 
 
 def _support_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -582,6 +566,32 @@ GRAPH_KCORE_SQL = _kcore_sql()
 _HITS_TOP = 10
 
 
+# The bipartite purchase relation is a dataset artifact like the
+# co-purchase edge list — cache it per (session, sf_dir) instead of
+# re-running the orders ⋈ lineitem distinct per call (guide §2.4).
+@dataset_cached
+def _hits_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distinct (cust, part) purchase edges, localCheckpointed."""
+    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    return (
+        orders.join(li, orders["o_orderkey"] == li["l_orderkey"])
+        .select(F.col("o_custkey").alias("cust"), F.col("l_partkey").alias("part"))
+        .distinct()
+        .localCheckpoint()
+    )
+
+
+@dataset_cached
+def _hits_sides(spark: SparkSession, sf_dir: str) -> tuple[int, int]:
+    """(distinct parts, distinct customers) of `_hits_edges`."""
+    return tuple(
+        _hits_edges(spark, sf_dir).agg(
+            F.count_distinct("part"), F.count_distinct("cust")
+        ).first()
+    )
+
+
 def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HITS hubs & authorities on the bipartite customer -> part purchase
     graph (hubs = customers, authorities = parts), run UNNORMALIZED: with
@@ -596,36 +606,14 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: per half-iteration ONE equi-join + map-side-combinable sum
     on a lineage-free edge relation — the PageRank recipe (`_pagerank_ranks`)
     on a bipartite graph; top-k per side is TakeOrdered, no global sort."""
-    def build_edges() -> DataFrame:
-        orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-        li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-        return (
-            orders.join(li, orders["o_orderkey"] == li["l_orderkey"])
-            .select(F.col("o_custkey").alias("cust"), F.col("l_partkey").alias("part"))
-            .distinct()
-            .localCheckpoint()
-        )
-
-    # r11: the bipartite purchase relation is a dataset artifact like the
-    # co-purchase edge list — cache it per (session, sf_dir) instead of
-    # re-running the orders ⋈ lineitem distinct per call (guide §2.4).
-    edges = _EDGE_CACHE.get_or_build(
-        (spark.sparkContext.applicationId, sf_dir, "hits_edges"), build_edges
-    )
+    edges = _hits_edges(spark, sf_dir)
     # r12: the per-half-iteration score relations are side-sized (one row
     # per part / per cust) but join against a lineage-free edge relation
     # with no size stats, so the planner sort-merge-shuffled the full edge
     # list each half-iteration. Below the shared node-count threshold the
     # score side broadcasts and edges never re-shuffle (the PageRank rule);
     # the side counts are dataset artifacts, cached next to the edges.
-    n_part, n_cust = _EDGE_CACHE.get_or_build(
-        (spark.sparkContext.applicationId, sf_dir, "hits_sides"),
-        lambda: tuple(
-            edges.agg(
-                F.count_distinct("part"), F.count_distinct("cust")
-            ).first()
-        ),
-    )
+    n_part, n_cust = _hits_sides(spark, sf_dir)
     bcast = max(n_part, n_cust) <= _PR_BCAST_NODES
     bb = F.broadcast if bcast else (lambda df: df)
     a1 = edges.groupBy("part").agg(F.count("*").alias("a"))  # Σ h0 = in-degree
@@ -696,9 +684,41 @@ SELECT * FROM auth UNION ALL SELECT * FROM hub
 _AA_HUB_MAX = 64  # exclude parts bought by more than this many customers
 _AA_TOP_N = 20
 
-# Per-(session, sf_dir) cache of the persisted weighted bipartite relation:
-# repeat calls must reuse the materialization, not stack fresh persists.
-_AA_CACHE = FitCache()  # scope-LRU bounded; unpersist-on-evict
+
+
+# Per-(session, sf_dir) persisted weighted bipartite relation: repeat calls
+# must reuse the materialization, not stack fresh persists.
+@dataset_cached
+def _aa_weighted_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(part, cust, w) purchases of hub-capped parts, w = 1/ln(deg) in
+    integer pico-units; persisted and materialized."""
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    cp = (
+        li.join(o, li["l_orderkey"] == o["o_orderkey"])
+        .select(F.col("o_custkey").alias("cust"), F.col("l_partkey").alias("part"))
+        .distinct()
+    )
+    deg = cp.groupBy("part").agg(F.count("*").alias("deg"))
+    # Weight as exact integer picro-units (1e12): the pair shuffle rows
+    # carry a long instead of a decimal(20,12) and the per-pair sum is
+    # a long aggregate — max 2,016 common parts x 1e12 stays far under
+    # int64. The decimal-free sum is still order-independent (integers).
+    wparts = deg.filter(
+        (F.col("deg") >= 2) & (F.col("deg") <= _AA_HUB_MAX)
+    ).select(
+        "part",
+        F.expr(
+            "CAST(ROUND(1.0e12 / ln(CAST(deg AS DOUBLE)), 0) AS BIGINT)"
+        ).alias("w"),
+    )
+    # cpw feeds BOTH self-join sides (and cp feeds deg + cpw): persist,
+    # or the order-join + distinct re-executes per consumer. Materialize
+    # eagerly so the readout plan (and its pinned fingerprint) sees the
+    # cached relation's real stats regardless of call order.
+    cpw = cp.join(wparts, "part").persist()
+    cpw.count()
+    return cpw
 
 
 def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -722,38 +742,7 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical double on both engines, folded to exact integer pico-units
     BEFORE the per-pair sum (order-independent long aggregate); the top-k
     is a TakeOrdered on (score desc, ids) — fully tiebroken."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-
-    def build() -> DataFrame:
-        li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-        o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-        cp = (
-            li.join(o, li["l_orderkey"] == o["o_orderkey"])
-            .select(F.col("o_custkey").alias("cust"), F.col("l_partkey").alias("part"))
-            .distinct()
-        )
-        deg = cp.groupBy("part").agg(F.count("*").alias("deg"))
-        # Weight as exact integer picro-units (1e12): the pair shuffle rows
-        # carry a long instead of a decimal(20,12) and the per-pair sum is
-        # a long aggregate — max 2,016 common parts x 1e12 stays far under
-        # int64. The decimal-free sum is still order-independent (integers).
-        wparts = deg.filter(
-            (F.col("deg") >= 2) & (F.col("deg") <= _AA_HUB_MAX)
-        ).select(
-            "part",
-            F.expr(
-                "CAST(ROUND(1.0e12 / ln(CAST(deg AS DOUBLE)), 0) AS BIGINT)"
-            ).alias("w"),
-        )
-        # cpw feeds BOTH self-join sides (and cp feeds deg + cpw): persist,
-        # or the order-join + distinct re-executes per consumer. Materialize
-        # eagerly so the readout plan (and its pinned fingerprint) sees the
-        # cached relation's real stats regardless of call order.
-        cpw = cp.join(wparts, "part").persist()
-        cpw.count()
-        return cpw
-
-    cpw = _AA_CACHE.get_or_build(key, build)
+    cpw = _aa_weighted_purchases(spark, sf_dir)
     a = cpw.select("part", F.col("cust").alias("cust_a"), "w")
     b = cpw.select(F.col("part").alias("part_b"), F.col("cust").alias("cust_b"))
     # The pair stream is the dominant volume (sum over parts of deg^2 rows);

@@ -33,7 +33,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from drive_health_etl_spark.operators.fitcache import FitCache
+from drive_health_etl_spark.operators.fitcache import dataset_cached
 from drive_health_etl_spark.sources.tables import load_table
 
 MEDIA_SCHEMA = (
@@ -501,39 +501,17 @@ FROM px GROUP BY doc_id
 """
 
 
-# Encoded-fixture cache: the pure-Python ENCODE pass is test scaffolding
-# (fixture generation), not the operator under measurement — encode once per
-# (session, sf_dir, codec params) and persist the blobs in executor memory so
-# every later query (and every bench repeat) measures only its own decode
-# work. Bounded: the fixture corpus is |documents|/3 thumbnail blobs of <=
-# ~1.5 KB each (a few MB per SF); at production scale media arrives already
-# encoded and this generation step does not exist.
-# Scope-LRU bounded; unpersist-on-evict. Keys are (applicationId, codec,
-# sf_dir, *params) — the dataset scope is (applicationId, sf_dir).
-_MEDIA_CACHE = FitCache(scope_of=lambda k: (k[0], k[2]))
+# Encoded fixtures (the attach_* tables): the pure-Python ENCODE pass is
+# test scaffolding (fixture generation), not the operator under measurement
+# — encode once per (session, sf_dir, codec params) via @dataset_cached and
+# persist the blobs in executor memory so every later query (and every
+# bench repeat) measures only its own decode work. Bounded: the fixture
+# corpus is |documents|/3 thumbnail blobs of <= ~1.5 KB each (a few MB per
+# SF); at production scale media arrives already encoded and this
+# generation step does not exist.
 
 
-def _cached_media(spark: SparkSession, key: tuple, build) -> DataFrame:
-    full_key = (spark.sparkContext.applicationId, *key)
-    # Evict entries from stopped sessions (their DataFrame handles are dead
-    # and their storage memory is gone with the JVM) so the cache stays
-    # bounded in long-lived drivers — same discipline as _CENTROID_CACHE's
-    # session-keyed bound and dedup._cached. NOTE: "different applicationId"
-    # equals "stopped" only because this driver runs sessions sequentially
-    # (one local JVM at a time); if alternating live sessions ever share one
-    # driver, check liveness (SparkSession.getActiveSession / an app
-    # registry) before unpersisting another session's entries.
-    app_id = full_key[0]
-    # Routed through FitCache.purge so the scope-order list stays exact
-    # (plain `del` left dead scopes occupying LRU slots — ADVICE r9) and the
-    # sweep is atomic under the cache's lock (rehearsal pools hit this
-    # concurrently).
-    _MEDIA_CACHE.purge(lambda k: k[0] != app_id)
-    # Cross-dataset growth within ONE live session is bounded by FitCache's
-    # scope LRU (unpersist-on-evict).
-    return _MEDIA_CACHE.get_or_build(full_key, lambda: build().persist())
-
-
+@dataset_cached
 def attach_png_images(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A REAL compressed-image table: the same deterministic raster rule as
     `attach_ppm_images` (text bytes rpad-repeated to w*h*3), but encoded as
@@ -567,11 +545,7 @@ def attach_png_images(spark: SparkSession, sf_dir: str) -> DataFrame:
                 blobs.append(encode_png(img))
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "content": blobs})
 
-    return _cached_media(
-        spark,
-        ("png", sf_dir),
-        lambda: raster.mapInPandas(op, schema="doc_id long, content binary"),
-    )
+    return raster.mapInPandas(op, schema="doc_id long, content binary").persist()
 
 
 def multimodal_png_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -657,12 +631,9 @@ def multimodal_qoi_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 MULTIMODAL_QOI_SQL = MULTIMODAL_DECODE_SQL
 
 
-def multimodal_png_adam7_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The web-era progressive layout end to end: the same rasters encoded
-    as Adam7-interlaced PNG (7 independently filtered reduced passes) and
-    decoded through the full deinterlacer. Same EXACT oracle as the
-    sequential path — a pass-grid, scatter, or per-pass filter-state bug
-    changes pixels and breaks the hash."""
+@dataset_cached
+def _png_adam7_images(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The `attach_png_images` rasters encoded as Adam7-interlaced PNGs."""
     base = (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % 3 == 0)
@@ -686,11 +657,16 @@ def multimodal_png_adam7_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 blobs.append(encode_png(img, interlace=True))
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "content": blobs})
 
-    media = _cached_media(
-        spark,
-        ("png_adam7", sf_dir),
-        lambda: raster.mapInPandas(enc, schema="doc_id long, content binary"),
-    )
+    return raster.mapInPandas(enc, schema="doc_id long, content binary").persist()
+
+
+def multimodal_png_adam7_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The web-era progressive layout end to end: the same rasters encoded
+    as Adam7-interlaced PNG (7 independently filtered reduced passes) and
+    decoded through the full deinterlacer. Same EXACT oracle as the
+    sequential path — a pass-grid, scatter, or per-pass filter-state bug
+    changes pixels and breaks the hash."""
+    media = _png_adam7_images(spark, sf_dir)
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -726,6 +702,7 @@ _JPEG420_MSE_BOUND = 1500.0
 _JPEG420_RESTART = 2  # MCUs per restart interval — exercises DRI/RSTm
 
 
+@dataset_cached
 def attach_jpeg_images(
     spark: SparkSession, sf_dir: str, *, subsampling: str = "444", restart_interval: int = 0
 ) -> DataFrame:
@@ -763,11 +740,7 @@ def attach_jpeg_images(
                 )
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "content": blobs, "raw": pdf["raw"]})
 
-    return _cached_media(
-        spark,
-        ("jpeg", sf_dir, subsampling, restart_interval),
-        lambda: raster.mapInPandas(op, schema="doc_id long, content binary, raw binary"),
-    )
+    return raster.mapInPandas(op, schema="doc_id long, content binary, raw binary").persist()
 
 
 def multimodal_jpeg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1231,6 +1204,7 @@ FROM px GROUP BY doc_id
 # --- Real palette images: GIF87a with hand-written LZW -----------------------
 
 
+@dataset_cached
 def attach_gif_images(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A REAL palette-image table: the doc_id%3==0 cohort's text bytes as a
     (h, w) GRAYSCALE index raster (256-gray global color table), encoded as
@@ -1263,11 +1237,7 @@ def attach_gif_images(spark: SparkSession, sf_dir: str) -> DataFrame:
                 blobs.append(encode_gif(idx, gray))
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "content": blobs})
 
-    return _cached_media(
-        spark,
-        ("gif", sf_dir),
-        lambda: raster.mapInPandas(op, schema="doc_id long, content binary"),
-    )
+    return raster.mapInPandas(op, schema="doc_id long, content binary").persist()
 
 
 def multimodal_gif_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1325,6 +1295,7 @@ FROM img
 _ADPCM_RMS_BOUND = 4500.0
 
 
+@dataset_cached
 def attach_adpcm_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A REAL compressed-audio table: the WAV cohort's samples (doc_id % 3
     == 1, int16 from the text-byte rule) encoded as genuine IMA ADPCM WAV
@@ -1352,11 +1323,7 @@ def attach_adpcm_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
                 blobs.append(encode_wav_ima(samples, WAV_RATE))
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "content": blobs, "raw": pdf["raw"]})
 
-    return _cached_media(
-        spark,
-        ("adpcm", sf_dir),
-        lambda: raster.mapInPandas(op, schema="doc_id long, content binary, raw binary"),
-    )
+    return raster.mapInPandas(op, schema="doc_id long, content binary, raw binary").persist()
 
 
 def multimodal_adpcm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1399,6 +1366,7 @@ FROM documents WHERE doc_id % 3 = 1
 # --- Real lossless compressed audio: subset FLAC ------------------------------
 
 
+@dataset_cached
 def attach_flac_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A REAL lossless-compressed audio table: the WAV cohort's samples
     (doc_id % 3 == 1, int16 = (byte-128)<<8 from the text rule) encoded as
@@ -1425,11 +1393,7 @@ def attach_flac_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
                 blobs.append(encode_flac(((b - 128) << 8).astype(np.int16), WAV_RATE))
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "content": blobs})
 
-    return _cached_media(
-        spark,
-        ("flac", sf_dir),
-        lambda: raster.mapInPandas(op, schema="doc_id long, content binary"),
-    )
+    return raster.mapInPandas(op, schema="doc_id long, content binary").persist()
 
 
 def multimodal_flac_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1488,13 +1452,14 @@ _MJPEG_PAYLOAD = MJPEG_W * MJPEG_H * 3
 _MJPEG_MSE_BOUND = 150.0  # same ASCII-noise worst case as _JPEG_MSE_BOUND
 
 
+@dataset_cached
 def attach_mjpeg_video(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A REAL video table in a real wire format: every doc with
     doc_id % 3 == 2 becomes a 4-frame Motion-JPEG AVI (RIFF container,
     '00dc' JPEG chunks, idx1 index — ``avi_codec.py``), frame f's raster
     drawn from the doc's text offset by 7*f so frames differ. Standards-
     compliant MJPEG players accept these blobs. Encoded once per session
-    (the `_cached_media` fixture discipline); repartitioned so the Python
+    (the encoded-fixture discipline); repartitioned so the Python
     codec spreads across cores."""
     from drive_health_etl_spark.operators.avi_codec import encode_avi_mjpeg
 
@@ -1528,11 +1493,7 @@ def attach_mjpeg_video(spark: SparkSession, sf_dir: str) -> DataFrame:
                 raws.append(b"".join(bytes(pdf[f"raw{f}"].iloc[i]) for f in range(MJPEG_FRAMES)))
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "content": blobs, "raw": raws})
 
-    return _cached_media(
-        spark,
-        ("mjpeg", sf_dir),
-        lambda: raster.mapInPandas(op, schema="doc_id long, content binary, raw binary"),
-    )
+    return raster.mapInPandas(op, schema="doc_id long, content binary, raw binary").persist()
 
 
 def multimodal_mjpeg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1611,12 +1572,13 @@ def _lp_frame_payload(text: str, f: int) -> bytes:
     return cur.tobytes()
 
 
+@dataset_cached
 def attach_lossless_p_video(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A REAL inter-frame video table: every doc with doc_id % 3 == 2
     becomes a 4-frame AVI with a BI_RGB DIB keyframe and LP01
     conditional-replenishment P-frames (``avi_codec.encode_avi_lossless_p``
     — per-8x8-block skip flags + mod-256 deltas, fully lossless). Encoded
-    once per session (`_cached_media`); repartitioned so the Python codec
+    once per session (`@dataset_cached`); repartitioned so the Python codec
     spreads across cores."""
     from drive_health_etl_spark.operators.avi_codec import encode_avi_lossless_p
 
@@ -1640,11 +1602,7 @@ def attach_lossless_p_video(spark: SparkSession, sf_dir: str) -> DataFrame:
                 raws.append(b"".join(payloads))
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "content": blobs, "raw": raws})
 
-    return _cached_media(
-        spark,
-        ("mjpeg_p", sf_dir),
-        lambda: base.mapInPandas(op, schema="doc_id long, content binary, raw binary"),
-    )
+    return base.mapInPandas(op, schema="doc_id long, content binary, raw binary").persist()
 
 
 def multimodal_mjpeg_p_stats(spark: SparkSession, sf_dir: str) -> DataFrame:

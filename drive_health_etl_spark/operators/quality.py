@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from drive_health_etl_spark.operators.fitcache import FitCache
+from drive_health_etl_spark.operators.fitcache import dataset_cached
 from drive_health_etl_spark.operators.text import TOKENS_SQL, tokens_col
 from drive_health_etl_spark.sources.tables import load_table
 
@@ -644,28 +644,24 @@ FROM totals t LEFT JOIN per_doc p ON t.doc_id = p.doc_id
 # quality_ppx_gate score with the SAME trained LM, and every bench sample
 # re-derived it from scratch (the same shape as the shingle-set subtree
 # cache in operators/dedup.py and the shared word-count scan of the
-# subword tokenizer family). Scope-LRU bounded; unpersist-on-evict.
-_LM_CACHE = FitCache()
+# subword tokenizer family). Each is a @dataset_cached builder.
 
 
+@dataset_cached
 def _bigram_rel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, g, w1) exploded bigram relation, persisted per
     (session, dataset) — feeds the count fit and the per-doc scoring join."""
-
-    def build() -> DataFrame:
-        docs = load_table(spark, sf_dir, "documents").repartition(
-            spark.sparkContext.defaultParallelism
-        )
-        return (
-            docs.select("doc_id", F.explode(_grams_col(tokens_col(), 2)).alias("g"))
-            .withColumn("w1", F.split("g", " ")[0])
-            .persist()
-        )
-
-    key = (spark.sparkContext.applicationId, sf_dir, "bi_rel")
-    return _LM_CACHE.get_or_build(key, build)
+    docs = load_table(spark, sf_dir, "documents").repartition(
+        spark.sparkContext.defaultParallelism
+    )
+    return (
+        docs.select("doc_id", F.explode(_grams_col(tokens_col(), 2)).alias("g"))
+        .withColumn("w1", F.split("g", " ")[0])
+        .persist()
+    )
 
 
+@dataset_cached
 def _bigram_lp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fitted bigram MLE: per-distinct-bigram ln p(w2|w1). Round 11
     restructure (guide §2.3 "aggregate before you shuffle"): ONE
@@ -674,20 +670,15 @@ def _bigram_lp(spark: SparkSession, sf_dir: str) -> DataFrame:
     exploded corpus a second time. c1 = SUM(c2) GROUP BY w1 is exactly
     COUNT(*) of bigram positions per first word, so every count (and the
     downstream double arithmetic) is bit-identical to the two-pass form."""
-
-    def build() -> DataFrame:
-        gb = _bigram_rel(spark, sf_dir).groupBy("g", "w1").agg(
-            F.count("*").alias("c2")
-        )
-        c1 = gb.groupBy("w1").agg(F.sum("c2").alias("c1"))
-        return (
-            gb.join(c1, "w1")
-            .select("g", F.log(F.col("c2").cast("double") / F.col("c1")).alias("lp"))
-            .persist()
-        )
-
-    key = (spark.sparkContext.applicationId, sf_dir, "bi_lp")
-    return _LM_CACHE.get_or_build(key, build)
+    gb = _bigram_rel(spark, sf_dir).groupBy("g", "w1").agg(
+        F.count("*").alias("c2")
+    )
+    c1 = gb.groupBy("w1").agg(F.sum("c2").alias("c1"))
+    return (
+        gb.join(c1, "w1")
+        .select("g", F.log(F.col("c2").cast("double") / F.col("c1")).alias("lp"))
+        .persist()
+    )
 
 
 def text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -752,35 +743,32 @@ FROM perdoc
 _KN_D = 0.75  # absolute discount (the standard Kneser-Ney value)
 
 
+@dataset_cached
 def _trigram_rel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, g, w12, w23, w2, w3) exploded trigram relation, persisted
     per (session, dataset) — feeds the LM count fit and the per-doc scoring
     join of both the KN query and the perplexity gate. (Pre-r11 this was a
     per-call localCheckpoint; the oracle MATERIALIZEs its tri CTE for the
     identical subtree-reuse reason.)"""
-
-    def build() -> DataFrame:
-        docs = load_table(spark, sf_dir, "documents").repartition(
-            spark.sparkContext.defaultParallelism
+    docs = load_table(spark, sf_dir, "documents").repartition(
+        spark.sparkContext.defaultParallelism
+    )
+    return (
+        docs.select("doc_id", F.explode(_grams_col(tokens_col(), 3)).alias("g"))
+        .withColumn("parts", F.split("g", " "))
+        .select(
+            "doc_id",
+            "g",
+            F.concat_ws(" ", F.col("parts")[0], F.col("parts")[1]).alias("w12"),
+            F.concat_ws(" ", F.col("parts")[1], F.col("parts")[2]).alias("w23"),
+            F.col("parts")[1].alias("w2"),
+            F.col("parts")[2].alias("w3"),
         )
-        return (
-            docs.select("doc_id", F.explode(_grams_col(tokens_col(), 3)).alias("g"))
-            .withColumn("parts", F.split("g", " "))
-            .select(
-                "doc_id",
-                "g",
-                F.concat_ws(" ", F.col("parts")[0], F.col("parts")[1]).alias("w12"),
-                F.concat_ws(" ", F.col("parts")[1], F.col("parts")[2]).alias("w23"),
-                F.col("parts")[1].alias("w2"),
-                F.col("parts")[2].alias("w3"),
-            )
-            .persist()
-        )
-
-    key = (spark.sparkContext.applicationId, sf_dir, "tri_rel")
-    return _LM_CACHE.get_or_build(key, build)
+        .persist()
+    )
 
 
+@dataset_cached
 def _trigram_lp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fitted KN-lite trigram LM: per-distinct-trigram ln P(w3|w1w2).
 
@@ -799,41 +787,36 @@ def _trigram_lp(spark: SparkSession, sf_dir: str) -> DataFrame:
     probability arithmetic is UNCHANGED — identical op order on identical
     counts, so the fitted lp doubles are bit-identical to the five-pass
     form (oracle-verified at sf0.001/0.01/0.1)."""
-
-    def build() -> DataFrame:
-        d = _KN_D
-        gc = _trigram_rel(spark, sf_dir).groupBy("g", "w12", "w23", "w2", "w3").agg(
-            F.count("*").alias("c123")
-        )
-        c12 = gc.groupBy("w12").agg(
-            F.sum("c123").alias("c12"), F.count_distinct("w3").alias("n1p12")
-        )
-        c23 = gc.groupBy("w23").agg(F.sum("c123").alias("c23"))
-        c2 = gc.groupBy("w2").agg(
-            F.sum("c123").alias("c2"), F.count_distinct("w3").alias("n1p2")
-        )
-        c3 = gc.groupBy("w3").agg(F.sum("c123").alias("c3"))
-        n = gc.agg(F.sum("c123").alias("n_total"))
-        grams = (
-            gc.join(c12, "w12")
-            .join(c23, "w23")
-            .join(c2, "w2")
-            .join(c3, "w3")
-            .crossJoin(F.broadcast(n))
-        )
-        p1 = F.col("c3").cast("double") / F.col("n_total")
-        p2 = (
-            F.greatest(F.col("c23").cast("double") - F.lit(d), F.lit(0.0)) / F.col("c2")
-            + F.lit(d) * F.col("n1p2") / F.col("c2") * p1
-        )
-        p3 = (
-            F.greatest(F.col("c123").cast("double") - F.lit(d), F.lit(0.0)) / F.col("c12")
-            + F.lit(d) * F.col("n1p12") / F.col("c12") * p2
-        )
-        return grams.select("g", F.log(p3).alias("lp")).persist()
-
-    key = (spark.sparkContext.applicationId, sf_dir, "tri_lp")
-    return _LM_CACHE.get_or_build(key, build)
+    d = _KN_D
+    gc = _trigram_rel(spark, sf_dir).groupBy("g", "w12", "w23", "w2", "w3").agg(
+        F.count("*").alias("c123")
+    )
+    c12 = gc.groupBy("w12").agg(
+        F.sum("c123").alias("c12"), F.count_distinct("w3").alias("n1p12")
+    )
+    c23 = gc.groupBy("w23").agg(F.sum("c123").alias("c23"))
+    c2 = gc.groupBy("w2").agg(
+        F.sum("c123").alias("c2"), F.count_distinct("w3").alias("n1p2")
+    )
+    c3 = gc.groupBy("w3").agg(F.sum("c123").alias("c3"))
+    n = gc.agg(F.sum("c123").alias("n_total"))
+    grams = (
+        gc.join(c12, "w12")
+        .join(c23, "w23")
+        .join(c2, "w2")
+        .join(c3, "w3")
+        .crossJoin(F.broadcast(n))
+    )
+    p1 = F.col("c3").cast("double") / F.col("n_total")
+    p2 = (
+        F.greatest(F.col("c23").cast("double") - F.lit(d), F.lit(0.0)) / F.col("c2")
+        + F.lit(d) * F.col("n1p2") / F.col("c2") * p1
+    )
+    p3 = (
+        F.greatest(F.col("c123").cast("double") - F.lit(d), F.lit(0.0)) / F.col("c12")
+        + F.lit(d) * F.col("n1p12") / F.col("c12") * p2
+    )
+    return grams.select("g", F.log(p3).alias("lp")).persist()
 
 
 def text_trigram_kn_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:

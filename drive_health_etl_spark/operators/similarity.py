@@ -18,7 +18,7 @@ import math
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from drive_health_etl_spark.operators.fitcache import FitCache
+from drive_health_etl_spark.operators.fitcache import dataset_cached
 from drive_health_etl_spark.sources.tables import load_table
 
 N_QUERIES = 8
@@ -33,18 +33,23 @@ def _norm(a: Column) -> Column:
     return F.sqrt(_dot(a, a))
 
 
+def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, e double[]) — the embeddings every ANN/index fit reads,
+    repartitioned so the single-file scan's folds run on all cores."""
+    return (
+        load_table(spark, sf_dir, "embeddings")
+        .repartition(spark.sparkContext.defaultParallelism)
+        .select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
+    )
+
+
 def cosine_topk(
     spark: SparkSession,
     sf_dir: str,
     n_queries: int = N_QUERIES,
     top_k: int = TOP_K,
 ) -> DataFrame:
-    emb = (
-        load_table(spark, sf_dir, "embeddings")
-        # single-file scan -> spread the dot-product evaluation across cores
-        .repartition(spark.sparkContext.defaultParallelism)
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
-    )
+    emb = _emb(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"), F.col("e").alias("qe")
     )
@@ -231,22 +236,15 @@ def kmeans_centroids(
 # repeated sim_ann_ivf calls (contract sweep + bench + bench recall pass)
 # reuse one Lloyd run instead of re-fitting. Same pattern as the MinHash
 # subtree cache in operators/dedup.py.
-_CENTROID_CACHE = FitCache()  # keys (appId, sf_dir, k); scope-LRU bounded
-
-
-def _centroids_cached(
-    spark: SparkSession, sf_dir: str, emb: DataFrame, k: int = N_CELLS
+@dataset_cached
+def _centroids(
+    spark: SparkSession, sf_dir: str, k: int = N_CELLS
 ) -> list[tuple[int, list[float]]]:
-    key = (spark.sparkContext.applicationId, sf_dir, k)
-    return _CENTROID_CACHE.get_or_build(key, lambda: kmeans_centroids(emb, k=k))
+    return kmeans_centroids(_emb(spark, sf_dir), k=k)
 
 
-_ASSIGN_CACHE = FitCache()  # keys (appId, sf_dir, k); scope-LRU bounded
-
-
-def _assigned_cached(
-    spark: SparkSession, sf_dir: str, emb: DataFrame, cents, k: int = N_CELLS
-) -> DataFrame:
+@dataset_cached
+def _assigned(spark: SparkSession, sf_dir: str, k: int = N_CELLS) -> DataFrame:
     """The INVERTED FILE — every vector's nearest-centroid cell plus its
     precomputed L2 norm — persisted once per (session, dataset, k). The
     16-centroid argmax fold is the single most expensive narrow map in the
@@ -260,26 +258,23 @@ def _assigned_cached(
     ccos (cosine to the assigned centroid — SemDeDup's keep priority, one
     fold at index time instead of per consumer); consumers project what
     they need."""
-
-    def build() -> DataFrame:
-        cent_rows = spark.createDataFrame(
-            [(cid, ce, _const_norm(ce)) for cid, ce in cents],
-            "cell int, ce array<double>, cnorm double",
+    cents = _centroids(spark, sf_dir, k)
+    cent_rows = spark.createDataFrame(
+        [(cid, ce, _const_norm(ce)) for cid, ce in cents],
+        "cell int, ce array<double>, cnorm double",
+    )
+    return (
+        _emb(spark, sf_dir)
+        .join(F.broadcast(_cents_df(spark, cents)))
+        .withColumn("cell", _assign_cell_expr(F.col("e")))
+        .select("vec_id", "e", "cell", _norm(F.col("e")).alias("enorm"))
+        .join(F.broadcast(cent_rows), "cell")
+        .select(
+            "vec_id", "e", "cell", "enorm",
+            (_dot(F.col("e"), F.col("ce")) / (F.col("enorm") * F.col("cnorm"))).alias("ccos"),
         )
-        return (
-            emb.join(F.broadcast(_cents_df(spark, cents)))
-            .withColumn("cell", _assign_cell_expr(F.col("e")))
-            .select("vec_id", "e", "cell", _norm(F.col("e")).alias("enorm"))
-            .join(F.broadcast(cent_rows), "cell")
-            .select(
-                "vec_id", "e", "cell", "enorm",
-                (_dot(F.col("e"), F.col("ce")) / (F.col("enorm") * F.col("cnorm"))).alias("ccos"),
-            )
-            .persist()
-        )
-
-    key = (spark.sparkContext.applicationId, sf_dir, k)
-    return _ASSIGN_CACHE.get_or_build(key, build)
+        .persist()
+    )
 
 
 def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -288,15 +283,7 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     (inverted file), then search only the query's cell. Assignment is a
     narrow centroid-literal scoring map; search joins on cell id with the
     8-query side broadcast — never all-pairs."""
-    emb = (
-        load_table(spark, sf_dir, "embeddings")
-        .repartition(spark.sparkContext.defaultParallelism)
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
-    )
-    cents = _centroids_cached(spark, sf_dir, emb)
-    assigned = _assigned_cached(spark, sf_dir, emb, cents).select(
-        "vec_id", "e", "cell"
-    )
+    assigned = _assigned(spark, sf_dir).select("vec_id", "e", "cell")
     q = assigned.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"), F.col("e").alias("qe"), F.col("cell").alias("qcell")
     )
@@ -396,13 +383,7 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reuses the fitted IVF centroids (same Lloyd run, cached per session);
     the pair join shuffles on cell id only. Returns per-cell dedup stats;
     the oracle recomputes the identical clustering via unrolled CTEs."""
-    emb = (
-        load_table(spark, sf_dir, "embeddings")
-        .repartition(spark.sparkContext.defaultParallelism)
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
-    )
-    cents = _centroids_cached(spark, sf_dir, emb)
-    return _semdedup_stats(spark, sf_dir, emb, cents)
+    return _semdedup_stats(spark, sf_dir)
 
 
 SEMDEDUP_CELL_TARGET = 256  # target vectors per cell for the k ~ n/cell policy
@@ -419,20 +400,12 @@ def dedup_semantic_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     table. Same fit/assign/pair machinery; only k differs."""
     import math as _math
 
-    emb = (
-        load_table(spark, sf_dir, "embeddings")
-        .repartition(spark.sparkContext.defaultParallelism)
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
-    )
-    n = emb.count()  # one cheap count; the Lloyd fit scans the corpus anyway
+    n = _emb(spark, sf_dir).count()  # one cheap count; the Lloyd fit scans the corpus anyway
     k = max(N_CELLS, _math.ceil(n / SEMDEDUP_CELL_TARGET))
-    cents = _centroids_cached(spark, sf_dir, emb, k=k)
-    return _semdedup_stats(spark, sf_dir, emb, cents, k=k)
+    return _semdedup_stats(spark, sf_dir, k=k)
 
 
-def _semdedup_stats(
-    spark: SparkSession, sf_dir: str, emb: DataFrame, cents, k: int = N_CELLS
-) -> DataFrame:
+def _semdedup_stats(spark: SparkSession, sf_dir: str, k: int = N_CELLS) -> DataFrame:
     # Norm is precomputed per VECTOR (linear work) so the quadratic in-cell
     # pair filter below evaluates a single array fold (the dot) per pair
     # instead of three — at |cell| ~ n/k this is the dominant cost term.
@@ -441,7 +414,7 @@ def _semdedup_stats(
     # r11: the assignment relation feeds three consumers (both pair-join
     # sides and the verdict join) — read it from the shared inverted-file
     # cache instead of re-running the argmax fold per consumer.
-    assigned = _assigned_cached(spark, sf_dir, emb, cents, k=k)
+    assigned = _assigned(spark, sf_dir, k)
     u = assigned.select(
         F.col("cell").alias("ucell"),
         F.col("vec_id").alias("u_id"),
@@ -532,13 +505,7 @@ def dedup_semantic_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     MEASURED slower here: the quadratic pair volume is in-cell bounded, so
     the per-batch Python round-trip dominated — r11 A/B 0.75 s vs 0.52 s
     warm at sf0.1's 125k pairs, and the fold fuses into codegen.)"""
-    emb = (
-        load_table(spark, sf_dir, "embeddings")
-        .repartition(spark.sparkContext.defaultParallelism)
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
-    )
-    cents = _centroids_cached(spark, sf_dir, emb)
-    return _semdedup_prune_verdicts(spark, sf_dir, emb, cents)
+    return _semdedup_prune_verdicts(spark, sf_dir)
 
 
 def dedup_semantic_prune_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -550,25 +517,15 @@ def dedup_semantic_prune_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     `tools/scale_probe.py` measures for the slope table."""
     import math as _math
 
-    emb = (
-        load_table(spark, sf_dir, "embeddings")
-        .repartition(spark.sparkContext.defaultParallelism)
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
-    )
-    n = emb.count()
+    n = _emb(spark, sf_dir).count()
     k = max(N_CELLS, _math.ceil(n / SEMDEDUP_CELL_TARGET))
-    cents = _centroids_cached(spark, sf_dir, emb, k=k)
-    return _semdedup_prune_verdicts(spark, sf_dir, emb, cents, k=k)
+    return _semdedup_prune_verdicts(spark, sf_dir, k=k)
 
 
-def _semdedup_prune_verdicts(
-    spark: SparkSession, sf_dir: str, emb: DataFrame, cents, k: int = N_CELLS
-) -> DataFrame:
+def _semdedup_prune_verdicts(spark: SparkSession, sf_dir: str, k: int = N_CELLS) -> DataFrame:
     # r11: assignment, norm AND the centroid-cosine priority come from the
     # shared inverted-file cache (three consumers below).
-    assigned = _assigned_cached(spark, sf_dir, emb, cents, k=k).select(
-        "vec_id", "cell", "e", "enorm", "ccos"
-    )
+    assigned = _assigned(spark, sf_dir, k).select("vec_id", "cell", "e", "enorm", "ccos")
     u = assigned.select(
         F.col("cell").alias("ucell"), F.col("vec_id").alias("u_id"),
         F.col("e").alias("ue"), F.col("enorm").alias("unorm"),
@@ -946,22 +903,14 @@ def pq_codebooks(emb: DataFrame, rounds: int = PQ_ROUNDS) -> list[tuple[int, int
 # Trained codebooks per (session, sf_dir): the fit is deterministic, so the
 # three PQ consumers (emb_pq_stats, sim_ann_pq_adc/_adc_distances,
 # sim_ann_ivfpq) and repeated bench/sweep calls share ONE Lloyd run — the
-# same pattern as _CENTROID_CACHE.
-_PQ_CB_CACHE = FitCache()  # scope-LRU bounded
+# same pattern as `_centroids`.
+@dataset_cached
+def _pq_codebooks(spark: SparkSession, sf_dir: str) -> list[tuple[int, int, list[float]]]:
+    return pq_codebooks(_emb(spark, sf_dir))
 
 
-def _pq_codebooks_cached(spark: SparkSession, sf_dir: str, emb: DataFrame) -> list[tuple[int, int, list[float]]]:
-    ckey = (spark.sparkContext.applicationId, sf_dir)
-    return _PQ_CB_CACHE.get_or_build(ckey, lambda: pq_codebooks(emb))
-
-
-_PQ_CODES_CACHE = FitCache()  # keys (appId, sf_dir); scope-LRU bounded
-
-
-def _pq_codes_cached(
-    spark: SparkSession, sf_dir: str, emb: DataFrame,
-    cbs: list[tuple[int, int, list[float]]],
-) -> DataFrame:
+@dataset_cached
+def _pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PQ-ENCODED CORPUS — every vector's per-subspace (best squared
     distance, code) — persisted once per (session, dataset), like the
     codebooks it derives from. r11: the corpus encode (posexplode to
@@ -975,96 +924,80 @@ def _pq_codes_cached(
     so codes/distances are bit-identical whether read from this cache or
     recomputed. Columns: vec_id, m, d (best squared distance, the MSE
     numerator), code; consumers project what they need."""
-
-    def build() -> DataFrame:
-        cb_all = _pq_all_cb_df(spark, cbs)
-        slices = F.posexplode(
-            F.array(*[F.slice("e", m * PQ_SUB + 1, PQ_SUB) for m in range(PQ_M)])
-        ).alias("m", "sv")
-        mycb = F.filter(F.col("pqall"), lambda c: c["m"] == F.col("m"))
-        base = (
-            emb.select("vec_id", slices)
-            .join(F.broadcast(cb_all))
-            .withColumn("svv", _dot(F.col("sv"), F.col("sv")))
+    cb_all = _pq_all_cb_df(spark, _pq_codebooks(spark, sf_dir))
+    slices = F.posexplode(
+        F.array(*[F.slice("e", m * PQ_SUB + 1, PQ_SUB) for m in range(PQ_M)])
+    ).alias("m", "sv")
+    mycb = F.filter(F.col("pqall"), lambda c: c["m"] == F.col("m"))
+    base = (
+        _emb(spark, sf_dir).select("vec_id", slices)
+        .join(F.broadcast(cb_all))
+        .withColumn("svv", _dot(F.col("sv"), F.col("sv")))
+    )
+    best = F.array_min(
+        F.transform(
+            mycb,
+            lambda c: F.struct(
+                (
+                    F.col("svv")
+                    - F.lit(2.0) * _dot(F.col("sv"), c["cv"])
+                    + _dot(c["cv"], c["cv"])
+                ).alias("d"),
+                c["code"].alias("code"),
+            ),
         )
-        best = F.array_min(
-            F.transform(
-                mycb,
-                lambda c: F.struct(
-                    (
-                        F.col("svv")
-                        - F.lit(2.0) * _dot(F.col("sv"), c["cv"])
-                        + _dot(c["cv"], c["cv"])
-                    ).alias("d"),
-                    c["code"].alias("code"),
-                ),
-            )
-        )
-        return (
-            base.select("vec_id", "m", best["d"].alias("d"), best["code"].alias("code"))
-            .persist()
-        )
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    return _PQ_CODES_CACHE.get_or_build(key, build)
+    )
+    return (
+        base.select("vec_id", "m", best["d"].alias("d"), best["code"].alias("code"))
+        .persist()
+    )
 
 
-_ADC_LUT_CACHE = FitCache()  # keys (appId, sf_dir); scope-LRU bounded
-
-
-def _adc_lut_cached(
-    spark: SparkSession, sf_dir: str, emb: DataFrame, qid: int,
-    cbs: list[tuple[int, int, list[float]]],
-) -> DataFrame:
+@dataset_cached
+def _adc_lut(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ADC LOOKUP TABLE — per (subspace, codeword) exact ``||q_m - c||^2``
     — persisted once per (session, dataset). A real ADC scorer builds the
     LUT once per query at search time; here the demo query (MAX vec_id) is
     itself a dataset artifact, so the ≤ PQ_M*PQ_K-row table is index state,
-    same as the codes (`_pq_codes_cached`). r12: every `_adc_distances`
+    same as the codes (`_pq_codes`). Before it, every `_adc_distances`
     call (pq_adc, ivfpq, adc_quality) re-ran the query-row scan + slice
     explode + codebook broadcast-join per call. Expressions are
-    byte-for-byte the inline build's, so LUT entries are bit-identical."""
-
-    def build() -> DataFrame:
-        cb_all = _pq_all_cb_df(spark, cbs)
-        slices = F.posexplode(
-            F.array(*[F.slice("e", m * PQ_SUB + 1, PQ_SUB) for m in range(PQ_M)])
-        ).alias("m", "sv")
-        mycb = F.filter(F.col("pqall"), lambda c: c["m"] == F.col("m"))
-        dist_struct = lambda c: F.struct(  # noqa: E731 — the shared (d, code) fold
-            (
-                F.col("svv")
-                - F.lit(2.0) * _dot(F.col("sv"), c["cv"])
-                + _dot(c["cv"], c["cv"])
-            ).alias("d"),
-            c["code"].alias("code"),
-        )
-        return (
-            emb.filter(F.col("vec_id") == qid)
-            .select(slices)
-            .join(F.broadcast(cb_all))
-            .withColumn("svv", _dot(F.col("sv"), F.col("sv")))
-            .select("m", F.explode(F.transform(mycb, dist_struct)).alias("lc"))
-            .select("m", F.col("lc.code").alias("code"), F.col("lc.d").alias("d"))
-            .persist()
-        )
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    return _ADC_LUT_CACHE.get_or_build(key, build)
-
-
-_QID_CACHE = FitCache()  # keys (appId, sf_dir); the demo-query vector id
+    byte-for-byte the inline build's, so LUT entries are bit-identical.
+    Its inputs, the query id and the codebooks, are themselves cached
+    functions of (spark, sf_dir), so the key covers everything the LUT
+    depends on."""
+    qid = _qid(spark, sf_dir)
+    cb_all = _pq_all_cb_df(spark, _pq_codebooks(spark, sf_dir))
+    slices = F.posexplode(
+        F.array(*[F.slice("e", m * PQ_SUB + 1, PQ_SUB) for m in range(PQ_M)])
+    ).alias("m", "sv")
+    mycb = F.filter(F.col("pqall"), lambda c: c["m"] == F.col("m"))
+    dist_struct = lambda c: F.struct(  # noqa: E731 — the shared (d, code) fold
+        (
+            F.col("svv")
+            - F.lit(2.0) * _dot(F.col("sv"), c["cv"])
+            + _dot(c["cv"], c["cv"])
+        ).alias("d"),
+        c["code"].alias("code"),
+    )
+    return (
+        _emb(spark, sf_dir).filter(F.col("vec_id") == qid)
+        .select(slices)
+        .join(F.broadcast(cb_all))
+        .withColumn("svv", _dot(F.col("sv"), F.col("sv")))
+        .select("m", F.explode(F.transform(mycb, dist_struct)).alias("lc"))
+        .select("m", F.col("lc.code").alias("code"), F.col("lc.d").alias("d"))
+        .persist()
+    )
 
 
-def _qid_cached(spark: SparkSession, sf_dir: str, emb: DataFrame) -> int:
+@dataset_cached
+def _qid(spark: SparkSession, sf_dir: str) -> int:
     """MAX(vec_id) — the deterministic demo-query row every ANN search
     uses. A dataset scalar (the `_pagerank_nodes` count precedent): each
     of sim_ann_ivfpq / _adc_distances / sim_adc_quality ran its own
     one-job collect per BUILD, so one ivfpq sample paid it twice."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    return _QID_CACHE.get_or_build(
-        key, lambda: emb.agg(F.max("vec_id")).collect()[0][0]
-    )
+    return _emb(spark, sf_dir).agg(F.max("vec_id")).collect()[0][0]
 
 
 def _pq_kmeans_sql_ctes(rounds: int = PQ_ROUNDS) -> str:
@@ -1103,7 +1036,7 @@ def emb_pq_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the code layout IVF-PQ search operates on.
 
     Codebooks are per-subspace-TRAINED via ``pq_codebooks`` (Lloyd k-means,
-    deterministic seed, shared through ``_PQ_CB_CACHE`` with the ADC/IVF-PQ
+    deterministic seed, shared through ``_pq_codebooks`` with the ADC/IVF-PQ
     consumers). Encoding is ONE pass over the corpus: subvectors posexplode
     to (m, sv) and score against the all-subspace codebook riding as a
     single 1-row broadcast (the round-2 per-subspace loop scanned the table
@@ -1115,15 +1048,9 @@ def emb_pq_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     left-to-right fold in both engines, so code choice and MSE are
     bit-identical to the oracle (which retrains the identical codebooks via
     ``_pq_kmeans_sql_ctes``)."""
-    emb = (
-        load_table(spark, sf_dir, "embeddings")
-        .repartition(spark.sparkContext.defaultParallelism)
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
-    )
-    cbs = _pq_codebooks_cached(spark, sf_dir, emb)
     # r11: read the persisted PQ index (identical argmin folds, materialized
     # once per session/dataset) instead of re-encoding the corpus
-    allm = _pq_codes_cached(spark, sf_dir, emb, cbs).select(
+    allm = _pq_codes(spark, sf_dir).select(
         F.col("m").alias("subspace"),
         F.col("d").alias("sq"),
         F.col("code"),
@@ -1182,7 +1109,7 @@ def sim_ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     the output distance rounds 6 dp. Scale: encode is a narrow map; the
     score join is (n x PQ_M) rows against a broadcast 64-entry LUT with a
     map-side-combinable sum. Codebooks are per-subspace-trained
-    (``pq_codebooks``, shared via ``_PQ_CB_CACHE``). The scorer itself is
+    (``pq_codebooks``, shared via ``_pq_codebooks``). The scorer itself is
     ``_adc_distances`` (shared verbatim with IVF-PQ); this query is that
     scorer plus the deterministic top-``_ADC_TOP``."""
     dist = _adc_distances(spark, sf_dir)
@@ -1252,15 +1179,10 @@ def sim_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     audited folds verbatim, and the final top-``_IVFPQ_TOP`` ties on
     vec_id. Scale: only probed-cell candidates are scored; the codes join
     is an equi-join on vec_id; the LUT broadcast is 64 entries."""
-    emb = (
-        load_table(spark, sf_dir, "embeddings")
-        .repartition(spark.sparkContext.defaultParallelism)
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
-    )
-    cents = _centroids_cached(spark, sf_dir, emb)
-    cmat = _cents_df(spark, cents)
-    assigned = _assigned_cached(spark, sf_dir, emb, cents).select("vec_id", "cell")
-    qid = _qid_cached(spark, sf_dir, emb)
+    emb = _emb(spark, sf_dir)
+    cmat = _cents_df(spark, _centroids(spark, sf_dir))
+    assigned = _assigned(spark, sf_dir).select("vec_id", "cell")
+    qid = _qid(spark, sf_dir)
     probe = (
         emb.filter(F.col("vec_id") == qid)
         .join(F.broadcast(cmat))
@@ -1326,24 +1248,18 @@ def _adc_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     table PQ_M times); the LUT is built the same single-pass way from the
     query row. Folds are identical to the audited per-subspace layout, so
     codes, LUT entries, and distances are bit-unchanged."""
-    emb = (
-        load_table(spark, sf_dir, "embeddings")
-        .repartition(spark.sparkContext.defaultParallelism)
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
-    )
-    qid = _qid_cached(spark, sf_dir, emb)
-    cbs = _pq_codebooks_cached(spark, sf_dir, emb)
+    qid = _qid(spark, sf_dir)
     # r11: the corpus side reads the persisted PQ index (same folds, the
     # query row filtered AFTER the cached encode — identical row set).
     # r12: the LUT side reads the persisted per-dataset lookup table too
-    # (`_adc_lut_cached`, same folds) instead of re-scanning the query row
+    # (`_adc_lut`, same folds) instead of re-scanning the query row
     # and re-joining the codebooks per call.
     codes = (
-        _pq_codes_cached(spark, sf_dir, emb, cbs)
+        _pq_codes(spark, sf_dir)
         .filter(F.col("vec_id") != qid)
         .select("vec_id", "m", "code")
     )
-    lut = _adc_lut_cached(spark, sf_dir, emb, qid, cbs)
+    lut = _adc_lut(spark, sf_dir)
     return (
         codes.join(F.broadcast(lut), ["m", "code"])
         .groupBy("vec_id")
@@ -1426,12 +1342,8 @@ def sim_adc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     EXACT squared-L2 top-10 for the same query — the recall readout that
     decides codebook size in production (the `dedup_lsh_quality` pattern
     applied to the PQ scorer). One row: pool sizes, overlap, recall."""
-    emb = (
-        load_table(spark, sf_dir, "embeddings")
-        .repartition(spark.sparkContext.defaultParallelism)
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
-    )
-    qid = _qid_cached(spark, sf_dir, emb)
+    emb = _emb(spark, sf_dir)
+    qid = _qid(spark, sf_dir)
     q = emb.filter(F.col("vec_id") == qid).select(F.col("e").alias("qe"))
     d2 = (
         _dot(F.col("qe"), F.col("qe"))
@@ -1890,20 +1802,12 @@ def emb_triplet_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     triplet margin, the quantity a curriculum filters on.
 
     Scale shape: cell assignment reuses the cached Lloyd fit
-    (`_CENTROID_CACHE`); candidates join the ``TRIPLET_ANCHORS``-row anchor
+    (`_centroids`); candidates join the ``TRIPLET_ANCHORS``-row anchor
     broadcast (fenced brute-force, the `sim_cosine_topk` pattern), then two
     per-anchor window top-1s. Anchors whose cell has no other member drop
     out (inner join) — deterministic in both engines. Ranking follows the
     repo float policy: rank on the 6-dp-rounded cosine, ties to vec_id."""
-    emb = (
-        load_table(spark, sf_dir, "embeddings")
-        .repartition(spark.sparkContext.defaultParallelism)
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
-    )
-    cents = _centroids_cached(spark, sf_dir, emb)
-    assigned = _assigned_cached(spark, sf_dir, emb, cents).select(
-        "vec_id", "e", "cell"
-    )
+    assigned = _assigned(spark, sf_dir).select("vec_id", "e", "cell")
     anchors = assigned.filter(F.col("vec_id") < TRIPLET_ANCHORS).select(
         F.col("vec_id").alias("anchor_id"),
         F.col("e").alias("ae"),
@@ -2004,24 +1908,17 @@ FROM pos p JOIN neg n ON n.anchor_id = p.anchor_id
 _BIN_CAND = 200
 
 
-_BIN_SIG_CACHE = FitCache()  # keys (appId, sf_dir); scope-LRU bounded
-
-
-def _binary_sigs_cached(spark: SparkSession, sf_dir: str, emb: DataFrame) -> DataFrame:
+@dataset_cached
+def _binary_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 1-bit sign-sketch index — (vec_id, sig_lo, sig_hi) — persisted
     once per (session, dataset). The pack fold (64 conditional shifts per
     vector) is identical to the inline expression it replaces, so Hamming
     distances and everything downstream are bit-unchanged."""
-
-    def build() -> DataFrame:
-        return emb.select(
-            "vec_id",
-            _sig_half(F.col("e"), 0).alias("sig_lo"),
-            _sig_half(F.col("e"), 32).alias("sig_hi"),
-        ).persist()
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    return _BIN_SIG_CACHE.get_or_build(key, build)
+    return _emb(spark, sf_dir).select(
+        "vec_id",
+        _sig_half(F.col("e"), 0).alias("sig_lo"),
+        _sig_half(F.col("e"), 32).alias("sig_hi"),
+    ).persist()
 
 
 def _sig_half(col: Column, offset: int) -> Column:
@@ -2052,15 +1949,11 @@ def sim_ann_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
     the expensive scan shrinks 32x in bytes and the FLOP stage by n/M. Same
     family as SimHash dedup (``dedup.py``) but for retrieval, with measured
     recall in ``sim_binary_quality``."""
-    emb = (
-        load_table(spark, sf_dir, "embeddings")
-        .repartition(spark.sparkContext.defaultParallelism)
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
-    )
+    emb = _emb(spark, sf_dir)
     # r11: the packed sign bits are the stored binary index — materialized
-    # once per (session, dataset) like the PQ codes (`_pq_codes_cached`);
+    # once per (session, dataset) like the PQ codes (`_pq_codes`);
     # the per-call work is only XOR-popcount probing + the top-M rerank
-    sigs = _binary_sigs_cached(spark, sf_dir, emb)
+    sigs = _binary_sigs(spark, sf_dir)
     qsigs = (
         sigs.filter(F.col("vec_id") < N_QUERIES)
         .select(

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from drive_health_etl_spark.functions.phone import normalize_phone_udf
 from drive_health_etl_spark.operators.dlq import route_dlq
-from drive_health_etl_spark.operators.fitcache import FitCache
+from drive_health_etl_spark.operators.fitcache import dataset_cached
 from drive_health_etl_spark.sources.tables import load_table, register_views
 
 # --- F1/F2: phone normalization (the one real UDF) --------------------------
@@ -313,9 +313,9 @@ def _sql_bucket(col: str) -> str:
 def sim_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Random-hyperplane LSH bucket assignment + occupancy histogram."""
     # r11: bucket codes from the shared LSH index (one corpus hash per
-    # session/dataset; see _lsh_index_cached)
+    # session/dataset; see _lsh_index)
     return (
-        _lsh_index_cached(spark, sf_dir)
+        _lsh_index(spark, sf_dir)
         .select("bucket")
         .groupBy("bucket")
         .agg(F.count("*").alias("n_vectors"))
@@ -335,8 +335,8 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from drive_health_etl_spark.operators.similarity import _dot
 
     # r11: hash table, query codes, and norms from the shared LSH index
-    # (identical folds, materialized once — see _lsh_index_cached)
-    emb = _lsh_index_cached(spark, sf_dir).select("vec_id", "e", "enorm", "bucket")
+    # (identical folds, materialized once — see _lsh_index)
+    emb = _lsh_index(spark, sf_dir).select("vec_id", "e", "enorm", "bucket")
     q = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"), F.col("e").alias("qe"),
         F.col("enorm").alias("qnorm"), F.col("bucket").alias("qb")
@@ -387,7 +387,7 @@ def sim_ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     from drive_health_etl_spark.operators.similarity import _dot
 
     # r11: hash table, query codes, and norms from the shared LSH index
-    emb = _lsh_index_cached(spark, sf_dir).select("vec_id", "e", "enorm", "bucket")
+    emb = _lsh_index(spark, sf_dir).select("vec_id", "e", "enorm", "bucket")
     q = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"), F.col("e").alias("qe"),
         F.col("enorm").alias("qnorm"), F.col("bucket").alias("qb")
@@ -509,10 +509,8 @@ def _sql_table_bucket(col: str, t: int) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
-_LSH_INDEX_CACHE = FitCache()  # keys (appId, sf_dir); scope-LRU bounded
-
-
-def _lsh_index_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
+@dataset_cached
+def _lsh_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """THE LSH INDEX — every vector with its single-table bucket, its
     N_TABLES multi-table bucket codes, and its precomputed L2 norm —
     persisted once per (session, dataset). r11: each LSH query re-hashed
@@ -520,32 +518,24 @@ def _lsh_index_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     N_PLANES hyperplane dots per vector; multitable folds 48), and the
     scoring joins re-scanned the embeddings besides. A production LSH tier
     stores exactly these hash tables at indexing time; search only probes
-    them (the `_assigned_cached` inverted-file precedent from the IVF
+    them (the `_assigned` inverted-file precedent from the IVF
     family). The norm is the same `_norm` fold the scorers inlined, so
     cosines read from here are bit-identical. Consumers project what they
     need."""
-    from drive_health_etl_spark.operators.similarity import _norm  # noqa: PLC0415
+    from drive_health_etl_spark.operators.similarity import _emb, _norm  # noqa: PLC0415
 
-    def build() -> DataFrame:
-        emb = (
-            load_table(spark, sf_dir, "embeddings")
-            .repartition(spark.sparkContext.defaultParallelism)
-            .select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
+    return (
+        _emb(spark, sf_dir)
+        .join(F.broadcast(_planes_df(spark)))
+        .select(
+            "vec_id",
+            "e",
+            _norm(F.col("e")).alias("enorm"),
+            _bucket_expr(F.col("e")).alias("bucket"),
+            _all_table_buckets_expr(F.col("e")).alias("tbuckets"),
         )
-        return (
-            emb.join(F.broadcast(_planes_df(spark)))
-            .select(
-                "vec_id",
-                "e",
-                _norm(F.col("e")).alias("enorm"),
-                _bucket_expr(F.col("e")).alias("bucket"),
-                _all_table_buckets_expr(F.col("e")).alias("tbuckets"),
-            )
-            .persist()
-        )
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    return _LSH_INDEX_CACHE.get_or_build(key, build)
+        .persist()
+    )
 
 
 def sim_ann_lsh_multitable(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -555,13 +545,13 @@ def sim_ann_lsh_multitable(spark: SparkSession, sf_dir: str) -> DataFrame:
     are (table, bucket) — uniform; candidate pairs are deduped BEFORE the
     cosine scoring so each pair is scored once. Measured recall@3 vs brute
     force at sf0.1: 0.958 (vs 0.458 single-table multiprobe). r11: corpus
-    hash tables, query codes, and norms all read `_lsh_index_cached`; the
+    hash tables, query codes, and norms all read `_lsh_index`; the
     probes side still aliases t as pt so the candidate join stays a true
     two-sided equi-join (a tb-derived SELF-join would resolve t == pt to
     one attribute and admit cross-table collisions)."""
     from drive_health_etl_spark.operators.similarity import _dot
 
-    idx = _lsh_index_cached(spark, sf_dir)
+    idx = _lsh_index(spark, sf_dir)
     tb = idx.select(
         "vec_id", F.posexplode(F.col("tbuckets")).alias("t", "bucket")
     )

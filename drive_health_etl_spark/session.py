@@ -16,12 +16,15 @@ from __future__ import annotations
 
 import os
 import threading
+import weakref
 
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
-_SHIPPED_APP_IDS: set[str] = set()
+# SparkContexts the package zip was shipped to (a stopped context's entry
+# dies with it; a new context is a new object and gets its own zip).
+_SHIPPED = weakref.WeakSet()
 
 
 def ship_package(spark: SparkSession) -> None:
@@ -32,9 +35,9 @@ def ship_package(spark: SparkSession) -> None:
     PYTHONPATH only helps if set before the JVM launches; a caller-provided
     session (the driver's) may exist already — so zip the package and
     ``addPyFile`` it, which distributes to workers at runtime. Idempotent
-    per app."""
-    app_id = spark.sparkContext.applicationId
-    if app_id in _SHIPPED_APP_IDS:
+    per SparkContext."""
+    sc = spark.sparkContext
+    if sc in _SHIPPED:
         return
     import tempfile
     import zipfile
@@ -50,8 +53,8 @@ def ship_package(spark: SparkSession) -> None:
                     full = os.path.join(root, fn)
                     rel = os.path.join("drive_health_etl_spark", os.path.relpath(full, pkg_dir))
                     zf.write(full, rel)
-    spark.sparkContext.addPyFile(zip_path)
-    _SHIPPED_APP_IDS.add(app_id)
+    sc.addPyFile(zip_path)
+    _SHIPPED.add(sc)
 
 
 class spark_conf:

@@ -357,6 +357,14 @@ def test_window_flagged_thresholds():
     assert flags and "external" in flags[0]
 
 
+def test_window_flagged_gates_iowait_like_the_whole_run_gate():
+    # the whole-run gate (idle_verdict) refuses iowait above the bound; a
+    # per-query burst window must be refused on the same threshold
+    assert window_flagged({"iowait_share": IDLE_IOWAIT_SHARE_MAX}) == []
+    flags = window_flagged({"iowait_share": IDLE_IOWAIT_SHARE_MAX + 0.01})
+    assert flags and "iowait" in flags[0]
+
+
 def test_sample_query_records_first_sample():
     # decreasing samples (warming caches): min is the last, first is sample 1
     seq = iter([3.0, 1.0, 0.5, 0.5])

@@ -10,6 +10,15 @@ import hashlib
 
 from drive_health_etl_spark.operators import bpe as B
 
+# Every fit-cached tokenizer trainer these fixtures exercise (their cached
+# values are plain Python lists/dicts, so clearing unpersists nothing).
+_FITS = (B._train_merges, B._word_counts, B._train_subword, B._train_wordpiece, B._train_unigram)
+
+
+def _clear_fits() -> None:
+    for fit in _FITS:
+        fit.cache_clear()
+
 
 def _write_docs(spark, tmp_path, docs: dict[int, str]) -> str:
     rows = [(d, t, "en", "s", len(t)) for d, t in docs.items()]
@@ -29,7 +38,7 @@ def test_bpe_encode_hand_computed(spark, tmp_path):
         3: "z z",
     }
     sf = _write_docs(spark, tmp_path, docs)
-    B._MERGE_CACHE.clear()
+    _clear_fits()
     merges = B._train_merges(spark, sf)
     assert [(m[1], m[2]) for m in merges][:2] == [("a", "b"), ("a~b", "c")]
 
@@ -64,7 +73,7 @@ def test_bpe_encode_hand_computed(spark, tmp_path):
     assert {r["token"]: r["count"] for r in vrows} == freq
     for r in vrows:
         assert r["is_merged"] == ("~" in r["token"])
-    B._MERGE_CACHE.clear()
+    _clear_fits()
 
 
 def test_bpe_encode_digest_is_order_sensitive(spark, tmp_path, monkeypatch):
@@ -74,11 +83,11 @@ def test_bpe_encode_digest_is_order_sensitive(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(B, "BPE_ROUNDS", 0)
     docs = {1: "p q r", 2: "r q p"}
     sf = _write_docs(spark, tmp_path, docs)
-    B._MERGE_CACHE.clear()
+    _clear_fits()
     rows = {r["doc_id"]: r for r in B.text_bpe_encode(spark, sf).collect()}
     assert rows[1]["ids_sum"] == rows[2]["ids_sum"]
     assert rows[1]["ids_sig"] != rows[2]["ids_sig"]
-    B._MERGE_CACHE.clear()
+    _clear_fits()
 
 
 def test_bpe_encode_no_pairs_and_empty_docs(spark, tmp_path):
@@ -89,7 +98,7 @@ def test_bpe_encode_no_pairs_and_empty_docs(spark, tmp_path):
 
     docs = {1: "solo", 2: "", 3: "duo"}
     sf = _write_docs(spark, tmp_path, docs)
-    B._MERGE_CACHE.clear()
+    _clear_fits()
     assert B._train_merges(spark, sf) == []
     got = {r["doc_id"]: r for r in B.text_bpe_encode(spark, sf).collect()}
     assert got[2]["n_tokens"] == 0 and got[2]["ids_sum"] == 0
@@ -109,7 +118,7 @@ def test_bpe_encode_no_pairs_and_empty_docs(spark, tmp_path):
             d, g["n_tokens_base"], g["n_tokens"], g["n_merged"],
             g["ids_sig"], g["ids_sum"],
         )
-    B._MERGE_CACHE.clear()
+    _clear_fits()
 
 
 def _py_bpe(docs: dict[int, str], rounds: int):
@@ -162,7 +171,7 @@ def test_bpe_loop_matches_python_reference_on_random_corpora(spark, tmp_path):
             n_tok = rng.choice([0, 1, rng.randint(2, 30)])
             docs[d] = " ".join(rng.choice(alpha) for _ in range(n_tok))
         sf = _write_docs(spark, tmp_path / f"t{trial}", docs)
-        B._MERGE_CACHE.clear()
+        _clear_fits()
         want_merges, want_vocab, want_freq, want = _py_bpe(docs, B.BPE_ROUNDS)
         got_merges = [(m[1], m[2]) for m in B._train_merges(spark, sf)]
         assert got_merges == want_merges, f"trial {trial}: merge table diverged"
@@ -175,7 +184,7 @@ def test_bpe_loop_matches_python_reference_on_random_corpora(spark, tmp_path):
         vrows = B.text_bpe_vocab(spark, sf).collect()
         assert {(r["token"], r["id"]) for r in vrows} == set(want_vocab.items())
         assert {r["token"]: r["count"] for r in vrows} == want_freq
-    B._MERGE_CACHE.clear()
+    _clear_fits()
 
 
 def _py_subword(docs: dict[int, str], rounds: int):
@@ -238,7 +247,7 @@ def test_bpe_subword_matches_python_reference(spark, tmp_path):
     ]
     for trial, docs in enumerate(corpora):
         sf = _write_docs(spark, tmp_path / f"s{trial}", docs)
-        B._MERGE_CACHE.clear()
+        _clear_fits()
         want_merges, want = _py_subword(docs, B.SUBWORD_ROUNDS)
         got_merges, _sp = B._train_subword(spark, sf)
         assert [tuple(m) for m in got_merges] == want_merges, f"trial {trial}"
@@ -248,7 +257,7 @@ def test_bpe_subword_matches_python_reference(spark, tmp_path):
             for r in B.text_bpe_subword_encode(spark, sf).collect()
         }
         assert got == want, f"trial {trial}: subword encode diverged ({docs})"
-    B._MERGE_CACHE.clear()
+    _clear_fits()
 
 
 def test_wordpiece_matches_python_reference_and_diverges_from_bpe(spark, tmp_path):
@@ -264,7 +273,7 @@ def test_wordpiece_matches_python_reference_and_diverges_from_bpe(spark, tmp_pat
         3: "aa bb ab ba aa",
     }
     sf = _write_docs(spark, tmp_path / "wp", docs)
-    B._MERGE_CACHE.clear()
+    _clear_fits()
 
     def py_wordpiece(docs, rounds):
         words: dict[str, int] = {}
@@ -315,7 +324,7 @@ def test_wordpiece_matches_python_reference_and_diverges_from_bpe(spark, tmp_pat
             r["doc_id"], r["n_words"], r["n_chars"], r["n_subwords"],
             r["sub_sig"], r["sub_sum"],
         )
-    B._MERGE_CACHE.clear()
+    _clear_fits()
 
 
 def test_unigram_hand_computed_and_long_word_splits(spark, tmp_path):
@@ -327,7 +336,7 @@ def test_unigram_hand_computed_and_long_word_splits(spark, tmp_path):
     # single word "ab": seed p uniform over {a, b, ab}; Viterbi picks the
     # single token (1/3 > 1/9); EM converges to p(ab) = 1
     sf = _write_docs(spark, tmp_path / "u1", {1: "ab", 2: "ab"})
-    B._MERGE_CACHE.clear()
+    _clear_fits()
     rows = B.text_unigram_train(spark, sf).collect()
     assert [(r["token"], r["usage"], r["p"], r["id"]) for r in rows] == [("ab", 2, 1.0, 0)]
     enc = {r["doc_id"]: r for r in B.text_unigram_encode(spark, sf).collect()}
@@ -347,7 +356,7 @@ def test_unigram_hand_computed_and_long_word_splits(spark, tmp_path):
             for d in range(1, rng.randint(2, 5) + 1)
         }
         sf = _write_docs(spark, tmp_path / f"u{trial + 2}", docs)
-        B._MERGE_CACHE.clear()
+        _clear_fits()
         got = {
             r["doc_id"]: (r["n_words"], r["n_chars"], r["n_subwords"],
                           r["sub_sig"], r["sub_sum"])
@@ -363,7 +372,7 @@ def test_unigram_hand_computed_and_long_word_splits(spark, tmp_path):
             for r in con.execute(B.TEXT_UNIGRAM_ENCODE_SQL).fetchall()
         }
         assert oracle == got, f"trial {trial}: unigram encode diverged ({docs})"
-    B._MERGE_CACHE.clear()
+    _clear_fits()
 
 
 def test_unigram_oracle_guards_overlong_words(spark, tmp_path):
@@ -374,7 +383,7 @@ def test_unigram_oracle_guards_overlong_words(spark, tmp_path):
 
     long_word = "q" * (B.UNI_WORD_MAX + 1)
     sf = _write_docs(spark, tmp_path, {1: f"ab {long_word}", 2: "ab"})
-    B._MERGE_CACHE.clear()
+    _clear_fits()
     rows = B.text_unigram_encode(spark, sf).collect()  # Spark side: fine
     assert {r["doc_id"] for r in rows} == {1, 2}
     con = duckdb.connect()
@@ -383,4 +392,4 @@ def test_unigram_oracle_guards_overlong_words(spark, tmp_path):
     )
     with pytest.raises(Exception, match="exceeds the .*-position DP unroll"):
         con.execute(B.TEXT_UNIGRAM_ENCODE_SQL).fetchall()
-    B._MERGE_CACHE.clear()
+    _clear_fits()

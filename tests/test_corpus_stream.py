@@ -147,7 +147,8 @@ def test_tokenize_stream_matches_batch_and_replay_idempotent(spark, tmp_path):
     (row-local, batch-invariant), and a REPLAYED batch must not duplicate
     output rows (the idempotent batch=<id> overwrite sink)."""
     from drive_health_etl_spark.operators.bpe import (
-        _MERGE_CACHE,
+        _train_subword,
+        _word_counts,
         subword_encoder,
         text_bpe_subword_encode,
     )
@@ -162,7 +163,8 @@ def test_tokenize_stream_matches_batch_and_replay_idempotent(spark, tmp_path):
     spark.createDataFrame(
         rows, "doc_id long, text string, lang string, source string, n_chars long"
     ).coalesce(1).write.mode("overwrite").parquet(f"{sf}/documents.parquet")
-    _MERGE_CACHE.clear()
+    _word_counts.cache_clear()
+    _train_subword.cache_clear()
 
     cfg = TokenizeStreamConfig(
         input_path=f"{sf}/spool",
@@ -194,4 +196,5 @@ def test_tokenize_stream_matches_batch_and_replay_idempotent(spark, tmp_path):
         tuple(r) for r in spark.read.parquet(cfg.output_path).drop("batch").collect()
     )
     assert again == want
-    _MERGE_CACHE.clear()
+    _word_counts.cache_clear()
+    _train_subword.cache_clear()

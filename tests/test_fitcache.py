@@ -2,6 +2,8 @@
 item 7): module-global caches of persisted DataFrames must shed whole
 datasets a long-lived driver has moved past, unpersisting their blocks on
 evict — and the scale_probe purge path (plain .clear()) must keep working.
+``dataset_cached`` keys every entry of the one store on (applicationId,
+sf_dir, function, bound params).
 """
 
 import os
@@ -9,7 +11,10 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from drive_health_etl_spark.operators.fitcache import FitCache
+import pytest
+
+from drive_health_etl_spark.operators import fitcache
+from drive_health_etl_spark.operators.fitcache import FitCache, dataset_cached
 
 
 class FakeDF:
@@ -21,7 +26,7 @@ class FakeDF:
 
 
 def test_scope_lru_evicts_oldest_scope_and_unpersists():
-    c = FitCache(scope_len=2, max_scopes=2)
+    c = FitCache(max_scopes=2)
     a1, a2, b1, c1 = FakeDF(), FakeDF(), FakeDF(), FakeDF()
     c.get_or_build(("app", "sfA", "x"), lambda: a1)
     c.get_or_build(("app", "sfA", "y"), lambda: a2)
@@ -36,7 +41,7 @@ def test_scope_lru_evicts_oldest_scope_and_unpersists():
 
 
 def test_touch_refreshes_lru_order():
-    c = FitCache(scope_len=2, max_scopes=2)
+    c = FitCache(max_scopes=2)
     a, b, d = FakeDF(), FakeDF(), FakeDF()
     c.get_or_build(("app", "sfA", "x"), lambda: a)
     c.get_or_build(("app", "sfB", "x"), lambda: b)
@@ -51,7 +56,7 @@ def test_eviction_survives_unpersist_errors():
         def unpersist(self):
             raise RuntimeError("session stopped")
 
-    c = FitCache(scope_len=2, max_scopes=1)
+    c = FitCache(max_scopes=1)
     c.get_or_build(("app", "sfA", "x"), lambda: Dead())
     fresh = FakeDF()
     c.get_or_build(("app", "sfB", "x"), lambda: fresh)  # must not raise
@@ -62,7 +67,7 @@ def test_eviction_survives_unpersist_errors():
 def test_composite_tuple_values_unpersist_each_element():
     # graph's node-set cache stores (DataFrame, count) pairs; eviction must
     # free the DataFrame's blocks despite the tuple wrapper
-    c = FitCache(scope_len=2, max_scopes=1)
+    c = FitCache(max_scopes=1)
     df = FakeDF()
     c.get_or_build(("app", "sfA", "nodes"), lambda: (df, 42))
     c.get_or_build(("app", "sfB", "x"), lambda: FakeDF())
@@ -70,26 +75,14 @@ def test_composite_tuple_values_unpersist_each_element():
 
 
 def test_non_unpersistable_values_are_just_dropped():
-    c = FitCache(scope_len=2, max_scopes=1)
+    c = FitCache(max_scopes=1)
     c.get_or_build(("app", "sfA"), lambda: [1.0, 2.0])  # plain fit weights
     c.get_or_build(("app", "sfB"), lambda: [3.0])
     assert ("app", "sfA") not in c
 
 
-def test_custom_scope_extractor():
-    # _MEDIA_CACHE keys are (appId, codec, sf_dir, *params): scope must be
-    # (appId, sf_dir), so two codecs of one dataset share a scope
-    c = FitCache(max_scopes=1, scope_of=lambda k: (k[0], k[2]))
-    png, gif, png2 = FakeDF(), FakeDF(), FakeDF()
-    c.get_or_build(("app", "png", "sfA"), lambda: png)
-    c.get_or_build(("app", "gif", "sfA"), lambda: gif)
-    assert png.persisted and gif.persisted  # same scope: no eviction
-    c.get_or_build(("app", "png", "sfB"), lambda: png2)
-    assert not png.persisted and not gif.persisted and png2.persisted
-
-
 def test_clear_drops_without_unpersist_for_session_recycle():
-    # scale_probe recycles sessions and purges *_CACHE dicts via .clear();
+    # scale_probe recycles sessions and purges the store via .clear();
     # the handles belong to a dead JVM, so clear must NOT call unpersist
     c = FitCache(max_scopes=4)
 
@@ -110,7 +103,7 @@ def test_delete_drops_empty_scope_from_lru_order():
     # ADVICE r9: plain deletion must not leave a dead scope occupying an
     # LRU slot — after removing a scope's last key, a full complement of
     # NEW scopes must fit without evicting a live one.
-    c = FitCache(scope_len=2, max_scopes=2)
+    c = FitCache(max_scopes=2)
     a, b, d = FakeDF(), FakeDF(), FakeDF()
     c.get_or_build(("app", "sfA", "x"), lambda: a)
     c.get_or_build(("app", "sfB", "x"), lambda: b)
@@ -125,7 +118,7 @@ def test_delete_drops_empty_scope_from_lru_order():
 
 
 def test_delete_keeps_scope_while_siblings_remain():
-    c = FitCache(scope_len=2, max_scopes=2)
+    c = FitCache(max_scopes=2)
     c.get_or_build(("app", "sfA", "x"), lambda: FakeDF())
     c.get_or_build(("app", "sfA", "y"), lambda: FakeDF())
     del c[("app", "sfA", "x")]
@@ -133,16 +126,16 @@ def test_delete_keeps_scope_while_siblings_remain():
 
 
 def test_purge_unpersists_and_maintains_order():
-    # the _cached_media stale-session sweep path
-    c = FitCache(max_scopes=4, scope_of=lambda k: (k[0], k[2]))
+    # the stale-session sweep path of dataset_cached
+    c = FitCache(max_scopes=4)
     old1, old2, live = FakeDF(), FakeDF(), FakeDF()
-    c.get_or_build(("app1", "png", "sfA"), lambda: old1)
-    c.get_or_build(("app1", "gif", "sfA"), lambda: old2)
-    c.get_or_build(("app2", "png", "sfA"), lambda: live)
+    c.get_or_build(("app1", "sfA", "png"), lambda: old1)
+    c.get_or_build(("app1", "sfA", "gif"), lambda: old2)
+    c.get_or_build(("app2", "sfA", "png"), lambda: live)
     n = c.purge(lambda k: k[0] != "app2")
     assert n == 2
     assert not old1.persisted and not old2.persisted and live.persisted
-    assert list(c) == [("app2", "png", "sfA")]
+    assert list(c) == [("app2", "sfA", "png")]
     assert c._scope_order == [("app2", "sfA")]
 
 
@@ -153,7 +146,7 @@ def test_concurrent_touch_and_build_is_race_free():
     # scopes and assert zero exceptions and exact bookkeeping.
     import threading
 
-    c = FitCache(scope_len=2, max_scopes=3)
+    c = FitCache(max_scopes=3)
     errors = []
     barrier = threading.Barrier(8)
 
@@ -188,7 +181,7 @@ def test_get_or_build_race_keeps_first_value():
     # retained; the loser's fresh DataFrame is unpersisted, not leaked
     import threading
 
-    c = FitCache(scope_len=2, max_scopes=4)
+    c = FitCache(max_scopes=4)
     built = []
     gate = threading.Barrier(2)
 
@@ -215,21 +208,23 @@ def test_get_or_build_race_keeps_first_value():
 
 
 def test_dedup_subtree_cache_sweep_frees_old_blocks(spark, monkeypatch):
-    """End-to-end on the real dedup cache: sweeping a second sf_dir past
-    the scope bound unpersists the first dataset's persisted subtree."""
-    from drive_health_etl_spark.operators import dedup as D
+    """End-to-end on a real persisted relation: sweeping a second sf_dir
+    past the scope bound unpersists the first dataset's cached subtree."""
+    monkeypatch.setattr(fitcache, "STORE", FitCache(max_scopes=1))
 
-    monkeypatch.setattr(D._SUBTREE_CACHE, "_max_scopes", 1)
-    D._SUBTREE_CACHE.clear()
-    try:
-        df1 = D._cached(spark, "/fake/dirA", "probe", lambda: spark.range(10))
-        assert df1.storageLevel.useMemory  # persisted while its scope lives
-        df2 = D._cached(spark, "/fake/dirB", "probe", lambda: spark.range(20))
-        assert not df1.storageLevel.useMemory  # evicted AND unpersisted
-        assert df2.storageLevel.useMemory
-        assert len(D._SUBTREE_CACHE) == 1
-    finally:
-        D._SUBTREE_CACHE.clear()
+    @dataset_cached
+    def probe(spark, sf_dir):
+        return spark.range(10 if sf_dir.endswith("A") else 20).persist()
+
+    df1 = probe(spark, "/fake/dirA")
+    assert df1.storageLevel.useMemory  # persisted while its scope lives
+    assert probe(spark, "/fake/dirA") is df1  # warm call: the same relation
+    df2 = probe(spark, "/fake/dirB")
+    assert not df1.storageLevel.useMemory  # evicted AND unpersisted
+    assert df2.storageLevel.useMemory
+    assert len(fitcache.STORE) == 1
+    probe.cache_clear()
+    assert not df2.storageLevel.useMemory and len(fitcache.STORE) == 0
 
 
 def test_get_or_build_reregisters_scope_evicted_during_build():
@@ -237,7 +232,7 @@ def test_get_or_build_reregisters_scope_evicted_during_build():
     evict the building scope mid-build; the store must re-register the
     scope (and re-apply the bound) so dict contents and _scope_order never
     diverge and the entry stays under LRU control."""
-    c = FitCache(scope_len=2, max_scopes=2)
+    c = FitCache(max_scopes=2)
 
     def build():
         # while "sfA" builds, two other scopes touch in and evict it
@@ -260,3 +255,102 @@ def test_get_or_build_reregisters_scope_evicted_during_build():
     c.get_or_build(("app", "sfE", "k"), lambda: e2)
     assert ("app", "sfA", "k") not in c
     assert not v.persisted
+
+
+class FakeSpark:
+    """Just enough of a SparkSession for the decorator's key."""
+
+    def __init__(self, app="app-1"):
+        self.sparkContext = type("SC", (), {"applicationId": app})()
+
+
+@pytest.fixture
+def store(monkeypatch):
+    s = FitCache()
+    monkeypatch.setattr(fitcache, "STORE", s)
+    return s
+
+
+def test_dataset_cached_refuses_unkeyable_params(spark, store):
+    # a DataFrame hashes by identity, so only a type check can refuse it;
+    # a list or dict would key on contents the builder may not own
+    @dataset_cached
+    def fit(spark, sf_dir, x=None):
+        return FakeDF()
+
+    for bad in (spark.range(1), [1, 2], {"k": 1}):
+        with pytest.raises(TypeError):
+            fit(spark, "/sf", bad)
+    assert len(store) == 0
+    fit(FakeSpark(), "/sf", 1.5)  # scalars are fine
+    fit(FakeSpark(), "/sf", True)
+    assert len(store) == 2
+
+
+def test_dataset_cached_binds_defaults_into_the_key(store):
+    n_cells = 16
+    built = []
+
+    @dataset_cached
+    def centroids(spark, sf_dir, k=n_cells):
+        built.append(k)
+        return FakeDF()
+
+    sp = FakeSpark()
+    a = centroids(sp, "/sf")
+    assert centroids(sp, "/sf", k=n_cells) is a
+    assert centroids(sp, "/sf", n_cells) is a
+    b = centroids(sp, "/sf", k=8)
+    assert b is not a
+    assert built == [n_cells, 8] and len(store) == 2
+
+
+def test_dataset_cached_functions_do_not_collide(store):
+    @dataset_cached
+    def left(spark, sf_dir, q=3):
+        return ["left", q]
+
+    @dataset_cached
+    def right(spark, sf_dir, q=3):
+        return ["right", q]
+
+    sp = FakeSpark()
+    assert left(sp, "/sf") == ["left", 3]
+    assert right(sp, "/sf") == ["right", 3]
+    assert left(sp, "/sf") == ["left", 3]
+    assert len(store) == 2
+    right.cache_clear()
+    assert len(store) == 1 and left(sp, "/sf") == ["left", 3]
+
+
+def test_dataset_cached_drops_entries_of_a_stopped_application(store):
+    @dataset_cached
+    def fit(spark, sf_dir):
+        return FakeDF()
+
+    old_a = fit(FakeSpark("app-1"), "/sfA")
+    old_b = fit(FakeSpark("app-1"), "/sfB")
+    new = fit(FakeSpark("app-2"), "/sfA")
+    assert new is not old_a
+    assert not old_a.persisted and not old_b.persisted and new.persisted
+    assert [k[:2] for k in store] == [("app-2", "/sfA")]
+    assert store._scope_order == [("app-2", "/sfA")]
+
+
+def test_one_cache_mechanism_in_the_package():
+    """Hand-keyed caches must not grow back: the package constructs exactly
+    one FitCache (the store), and only fitcache.py reads applicationId."""
+    import re
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parents[1] / "drive_health_etl_spark"
+    ctor = re.compile(r"(?<!class )\bFitCache\(")
+    ctors, app_ids = [], []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        src = path.read_text()
+        ctors += [rel] * len(ctor.findall(src))
+        if "applicationId" in src and rel != "operators/fitcache.py":
+            app_ids.append(rel)
+    assert ctors == ["operators/fitcache.py"]
+    assert app_ids == []

@@ -301,7 +301,7 @@ BENCH_PLAN_FINGERPRINTS = {
     "text_bpe_token_count": {},
     "sim_cosine_topk": {"shuffle_exchange": 3, "broadcast_exchange": 1, "BroadcastNestedLoopJoin": 1},
     # r11: corpus hash/bucket codes read the persisted LSH index
-    # (_lsh_index_cached) — the per-call corpus re-hash exchanges are gone
+    # (_lsh_index) — the per-call corpus re-hash exchanges are gone
     "sim_ann_lsh": {"shuffle_exchange": 1, "broadcast_exchange": 1, "BroadcastHashJoin": 1},
     "sim_ann_lsh_multiprobe": {"shuffle_exchange": 1, "broadcast_exchange": 1, "BroadcastHashJoin": 1},
     "sim_mmr_rerank": {"shuffle_exchange": 1},
@@ -374,7 +374,7 @@ BENCH_PLAN_FINGERPRINTS = {
     # explicit broadcasts (the cached relation has no pre-AQE size stats)
     "sim_ann_lsh_multitable": {"shuffle_exchange": 2, "broadcast_exchange": 3, "BroadcastHashJoin": 3},
     # r11: cell assignment + norms come from the shared inverted-file cache
-    # (_assigned_cached) — the per-query argmax fold and its centroid
+    # (_assigned) — the per-query argmax fold and its centroid
     # broadcasts are gone from the steady-state plan
     "sim_ann_ivf": {"shuffle_exchange": 1, "broadcast_exchange": 1, "BroadcastHashJoin": 1},
     # r12: LUT read from the persisted per-dataset relation — its build
@@ -382,7 +382,7 @@ BENCH_PLAN_FINGERPRINTS = {
     "sim_ann_pq_adc": {"shuffle_exchange": 1, "broadcast_exchange": 1, "BroadcastHashJoin": 1},
     # r12: the probed-cell fence broadcasts into the ADC-score join below
     # the corpus-size gate (was an SMJ over two stat-less relations)
-    # r12: the ADC LUT is a persisted per-dataset relation (`_adc_lut_cached`)
+    # The ADC LUT is a persisted per-dataset relation (`_adc_lut`)
     # — the query-row scan + slice explode + codebook BNLJ dropped per call
     "sim_ann_ivfpq": {"shuffle_exchange": 2, "broadcast_exchange": 4, "BroadcastHashJoin": 3, "BroadcastNestedLoopJoin": 1},
     # r11: both SemDeDup halves read assignment/norm/ccos from the shared
@@ -487,8 +487,11 @@ BENCH_PLAN_FINGERPRINTS = {
         # full on BOTH self-join sides: 2x freq shuffle + 2x rank window).
         # The live plan is candidate BHJ + distinct agg + sketch/verify
         # joins over InMemoryTableScans; joins broadcast by cached-relation
-        # stats at test scale and stay equi-keyed at cluster scale.
-        "broadcast_exchange": 4,
+        # stats at test scale and stay equi-keyed at cluster scale. One
+        # broadcast per BHJ: the sketch ships to BOTH sides (the side-b
+        # exchange follows a dedented nested-cache rendering, which the
+        # fingerprint used to swallow and pinned as 4).
+        "broadcast_exchange": 5,
         "BroadcastHashJoin": 5,
     },
     # r12: score relations broadcast into the edge joins below the node
@@ -685,3 +688,47 @@ def test_live_plan_skips_nested_materialized_cache_rendering():
     assert "ResultQueryStage" not in live
     assert "BroadcastExchange" in live
     assert "rangepartitioning" in live
+
+
+def test_live_plan_counts_sibling_between_nested_header_and_cache_boundary():
+    """A cache built from another cache renders the inner build's
+    '== Final Plan ==' header DEDENTED far below the outer cache boundary.
+    That header must not lower the skip's anchor: a LIVE sibling whose
+    indent falls between the dedented header and the cache boundary comes
+    after the cached subtree and must still be counted."""
+    from drive_health_etl_spark.plans.fingerprint import _live_plan
+
+    plan = "\n".join([
+        "Project [a]",
+        "+- BroadcastHashJoin [k], [k3], Inner, BuildRight, false",
+        "   :- Project [k]",
+        "   :  +- Filter isnotnull(k)",
+        "   :     +- BroadcastHashJoin [k], [k2], Inner, BuildRight, false",
+        "   :        :- InMemoryTableScan [k]",            # cache boundary
+        "   :        :     +- InMemoryRelation [k], StorageLevel(memory)",
+        "   :        :           +- AdaptiveSparkPlan isFinalPlan=true",
+        "                              +- == Final Plan ==",
+        "                                 ResultQueryStage 1",
+        "                                 +- Exchange hashpartitioning(dead1, 8)",
+        "                                    +- InMemoryTableScan [k]",
+        "                                          +- InMemoryRelation [k], StorageLevel(memory)",
+        "                                                +- AdaptiveSparkPlan isFinalPlan=true",
+        "      +- == Final Plan ==",                        # dedented nested header
+        "         ResultQueryStage 0",
+        "         +- Exchange hashpartitioning(dead2, 8)",
+        "            +- Range (0, 10, step=1, splits=2)",
+        "      +- == Initial Plan ==",
+        "         Exchange hashpartitioning(dead3, 8)",
+        "         +- Range (0, 10, step=1, splits=2)",
+        "                              +- == Initial Plan ==",
+        "                                 Exchange hashpartitioning(dead4, 8)",
+        "                                 +- InMemoryTableScan [k]",
+        "   :        +- BroadcastExchange Mode, [plan_id=1]",          # LIVE sibling
+        "   :           +- Exchange hashpartitioning(live1, 8)",      # LIVE
+        "   +- BroadcastExchange Mode, [plan_id=2]",                   # LIVE
+        "      +- Exchange rangepartitioning(live2, 8)",               # LIVE
+    ])
+    live = _live_plan(plan)
+    assert "dead" not in live and "ResultQueryStage" not in live
+    assert "live1" in live and "live2" in live
+    assert live.count("BroadcastExchange") == 2

@@ -97,18 +97,18 @@ def test_carried_annotation_roundtrips_through_parse():
     assert rows2["graph_pagerank"].startswith(GOOD_ROW)
 
 
-def test_purge_package_caches_clears_cache_dicts():
-    """Recycling must drop per-application cache entries (they pin py4j
-    references of dead SparkContexts) — any module-level *_CACHE dict in
-    the package is the convention."""
-    import drive_health_etl_spark.operators.dedup as D
+def test_purge_package_caches_clears_cache_dicts(monkeypatch):
+    """Recycling must drop the dataset-cache entries (they pin py4j
+    references of dead SparkContexts) — the one store holds them all."""
     from scale_probe import _purge_package_caches
 
-    D._SUBTREE_CACHE["sentinel"] = "x"
-    D._VOCAB_SIZE_CACHE[("app", "sf")] = 7
+    from drive_health_etl_spark.operators import fitcache
+
+    store = fitcache.FitCache()
+    monkeypatch.setattr(fitcache, "STORE", store)
+    store.get_or_build(("app", "sf", "sentinel", ()), lambda: "x")
     _purge_package_caches()
-    assert D._SUBTREE_CACHE == {}
-    assert D._VOCAB_SIZE_CACHE == {}
+    assert store == {} and store._scope_order == []
 
 
 def test_deep_only_names_are_validated():

@@ -260,7 +260,7 @@ SF1_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__)
 
 # Recycle the Spark session every N sf1 probes. The r6 crash happened after
 # ~118k JVM objects accumulated across 36 back-to-back deep probes in one
-# session; per-application caches (keyed by applicationId) re-fit cleanly in
+# session; the dataset caches (keyed per application) re-fit cleanly in
 # the fresh session.
 RECYCLE_EVERY = 6
 # The first-decade loop needs recycling too: ~80 probes x 9 executions
@@ -441,19 +441,11 @@ def _run(spark, name: str, sf_dir: str) -> float:
 
 
 def _purge_package_caches() -> None:
-    """Drop per-application cache entries across the package so a recycled
-    session doesn't pin py4j references (and therefore JVM objects) of dead
-    SparkContexts — module-level dicts named *_CACHE are the convention."""
-    import sys as _sys
+    """Drop the dataset-cache entries so a recycled session doesn't pin py4j
+    references (and therefore JVM objects) of dead SparkContexts."""
+    from drive_health_etl_spark.operators.fitcache import STORE
 
-    for mod_name, mod in list(_sys.modules.items()):
-        if not mod_name.startswith("drive_health_etl_spark"):
-            continue
-        for attr in dir(mod):
-            if attr.endswith("_CACHE"):
-                obj = getattr(mod, attr, None)
-                if isinstance(obj, dict):
-                    obj.clear()
+    STORE.clear()
 
 
 def _fresh_session(cpus: int):
