@@ -460,8 +460,8 @@ def wait_for_idle_window(
 # gate passed at 1.4-3.8% average steal while individual queries absorbed
 # 11-15% bursts, shipping burst-hit per-query numbers and a 32c/8c
 # contradiction). A query whose own sample window shows a steal or external
-# burst is re-sampled (bounded); only if EVERY pass is flagged does the
-# per-pass minimum ship, explicitly marked flagged_and_kept.
+# burst is re-sampled (bounded) until a pass is clean; the fastest pass
+# ships, marked flagged_and_kept when its window was flagged.
 PER_QUERY_RESAMPLE_MAX = max(
     0, int(os.environ.get("SPARK_GRAFT_BENCH_QUERY_RESAMPLES", "2"))
 )
@@ -522,10 +522,16 @@ def sample_query(run, snapshot=load_snapshot, loadavg=None) -> tuple[float, dict
 def sample_query_gated(
     run, snapshot=load_snapshot, loadavg=None, max_resamples=None
 ) -> tuple[float, dict]:
-    """Re-sample a query whose window shows a steal/external burst; ship the
-    first CLEAN pass. If every pass is flagged, ship the fastest flagged
-    pass (a min under load is still an upper bound on engine cost) marked
-    flagged_and_kept=true so the artifact is self-identifying."""
+    """Re-sample a query whose window shows a steal/external/iowait burst,
+    up to `max_resamples` times or until a pass is clean, and ship the
+    FASTEST pass, flagged or not. Load from outside the engine only ever
+    inflates a wall, so a flagged pass's minimum is still an upper bound on
+    engine cost, and the min over all passes is the tightest one — the same
+    rule `merge_attempts` applies across attempts. Shipping a slower clean
+    pass instead would let a warm-up or GC hiccup in the clean window read
+    as a regression against rounds that kept their minima. A shipped
+    flagged pass is marked flagged_and_kept=true (a clean pass wins ties)
+    so the artifact is self-identifying."""
     if max_resamples is None:
         max_resamples = PER_QUERY_RESAMPLE_MAX
     passes: list[tuple[float, dict, list[str]]] = []
@@ -535,13 +541,11 @@ def sample_query_gated(
         passes.append((t, rec, flags))
         if not flags:
             break
-    t, rec, flags = passes[-1]
-    if flags:  # every pass flagged: keep the fastest, say so
-        t, rec, _ = min(passes, key=lambda p: p[0])
-        rec = dict(rec)
+    t, rec, flags = min(passes, key=lambda p: (p[0], bool(p[2])))
+    rec = dict(rec)
+    if flags:
         rec["flagged_and_kept"] = True
     if len(passes) > 1 or flags:
-        rec = dict(rec)
         rec["resamples"] = len(passes) - 1
         rec["flagged_windows"] = [p[2] for p in passes if p[2]]
     # `first` is the coldest sample of the attempt: take it from pass 1

@@ -2014,24 +2014,23 @@ _LCS_BCAST_DOCS = 2_000_000
 # Seed rung cap: rung-r fingerprints hash r chars per position, so the seed
 # job's work is O(corpus_chars * 2 * cap) — capped so a single pathological
 # multi-MB document cannot make the seed quadratic in its own length. Above
-# the cap the bisection loop takes over (it only ever hashes the tiny
-# frontier). 1024 matches the DuckDB oracle's rung grid.
+# the cap the frontier rounds take over (they only ever hash the frontier).
+# 1024 matches the DuckDB oracle's rung grid.
 _LCS_RUNG_CAP = 1024
-# One-shot exhaustive probe budget: after the seed pins L* into
-# [best, hi), enumerate EVERY candidate length in one job iff the exploded
-# row count and the hashed-char volume stay small; otherwise bisect (the
-# 100 TB path — a heavily-duplicated corpus keeps a large frontier).
-_LCS_ONESHOT_ROWS = 64_000_000
-# r11 (measured): the exhaustive job hashes ~cnt*w*hi chars, a bisection
-# probe only ~cnt*hi (one length, same frontier) plus one job of fixed
-# overhead — so the one-shot is only worth taking once its volume is
-# within a few dozen probe-equivalents. The old 8e9 budget fired with the
-# window still 321 lengths wide at sf0.1 (6.9e9 chars hashed, 3.1 s, 60%
-# of the query) where one more 19M-char rung probe would first collapse
-# the frontier 37k -> ~600; at 5e8 the search takes that probe and the
-# one-shot drops to ~22M chars (4.4 -> ~2.4 s end to end, same L* — the
-# search is exact along every path, only the probe schedule changes).
-_LCS_ONESHOT_CHARS = 500_000_000
+# Per-round budget of a frontier round: it probes k lengths of the window at
+# once, k = the most that keeps |frontier| * k exploded rows within ROWS and
+# |frontier| * k * hi hashed chars within CHARS. k = 1 is plain bisection
+# (the 100 TB path: a heavily-duplicated corpus keeps a large frontier);
+# k = the whole window is one exhaustive round. Every round costs the same
+# jobs plus driver planning whatever its k (0.3-0.5 s over a frontier of a
+# hundred positions), so the budget trades one round's hashing against the
+# rounds it saves. CHARS was tuned on warm calls (4 cores, 3 calls each):
+# 3e7 / 1e8 / 3e8 / 1e9 took
+# 1.5-1.8 / 1.3-1.4 / 1.4-1.5 / 2.2-2.9 s at sf0.01 and 2.9-3.2 / 2.5-2.7 /
+# 2.9-3.6 / 3.1-3.8 s at sf0.1 — past 1e8 a round hashes more than the
+# rounds it saves cost.
+_LCS_ROUND_ROWS = 64_000_000
+_LCS_ROUND_CHARS = 100_000_000
 
 
 @dataset_cached
@@ -2054,6 +2053,18 @@ def _lcs_stats(spark: SparkSession, sf_dir: str) -> tuple[int, int]:
     return (max_n or 0), n_docs
 
 
+def _shared_across_docs(df: DataFrame, *keys: str) -> DataFrame:
+    """Rows of `df` whose `keys` class holds >= 2 distinct doc_ids: one
+    window shuffle, no second aggregation or semi-join (min != max is
+    count_distinct >= 2)."""
+    w = Window.partitionBy(*keys)
+    return (
+        df.withColumn("_sh", F.min("doc_id").over(w) != F.max("doc_id").over(w))
+        .filter("_sh")
+        .drop("_sh")
+    )
+
+
 def dedup_suffix_lcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT longest cross-document repeated substring — the unbounded-k
     completion of the suffix-rank family (`dedup_suffix_doubling` caps its
@@ -2062,32 +2073,32 @@ def dedup_suffix_lcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     a suffix ARRAY's cross-document LCP maximum gives, cf. Manber-Myers
     1990 and the suffix-array dedup machinery of Lee et al. 2022).
 
-    Algorithm (rung-seeded distributed rank bisection): shared(L) :=
-    "some length-L substring occurs in >= 2 distinct documents" is
-    monotone decreasing in L, so L* is found by search over L in
-    [0, max_len]. A probe at L fingerprints every candidate suffix
-    position's length-L prefix (xxhash64 of the substring — 64-bit
-    equality classes exactly as in KMR prefix doubling, except the class
-    id is computed directly because documents are scan-resident strings)
-    and hash-aggregates by fingerprint, testing for a class with >= 2
-    distinct docs. The search first BISECTS A GEOMETRIC RUNG GRID
-    (8, 16, ..., min(max_len, rung cap) — the oracle's rung ladder) by
-    rung INDEX, reusing the position FRONTIER across probes (a position
-    can start an L-repeat, L > r, only if its r-prefix is already shared),
-    pinning lo = best shared rung and hi = 2*best (bisection ends on
-    adjacent indices, so the next rung was tested and failed). Only probes
-    taken before any rung succeeds scan full corpus positions — at most
-    log2(#rungs) of them — where r9's cold start materialized one frontier
-    row per corpus character for ~4 rounds (VERDICT r9 item 2); a fused
-    all-rungs-in-one-job seed was tried and rejected (#rungs x corpus rows
-    of near-unique keys through one shuffle — 2.4x the sf1 wall).
-    The remaining window (lo, hi) then resolves EXHAUSTIVELY in one job —
-    every candidate length for every frontier position, when
-    |frontier| * window fits the one-shot budget — or by per-round
-    bisection probes over the shrinking checkpointed frontier when it
-    does not (the 100 TB path: a heavily-duplicated corpus keeps a large
-    frontier). Driver involvement is one boolean per round
-    (`pagerank`-style bounded iteration), <= log2(rung cap) rounds.
+    Algorithm (budgeted multi-length rounds over a position frontier):
+    shared(L) := "some length-L substring occurs in >= 2 distinct
+    documents" is monotone decreasing in L, so L* is found by search over
+    the open window (lo, hi), starting at (0, max_len + 1). A probe at L
+    fingerprints every candidate position's length-L prefix (xxhash64 of
+    the substring — 64-bit equality classes exactly as in KMR prefix
+    doubling, except the class id is computed directly because documents
+    are scan-resident strings); a (length, fingerprint) class is shared
+    when its min and max doc_id differ. The search is ONE loop of rounds,
+    each one window shuffle and one count job:
+    - Seed rounds run while nothing is shared yet. Each probes ONE rung of
+      the geometric grid 8, 16, ..., min(max_len, rung cap) over all
+      corpus positions, bisecting the grid by rung index: at most
+      log2(#rungs) full-position probes. A fused all-rungs seed was tried
+      and rejected (#rungs x corpus rows of near-unique keys through one
+      shuffle — 2.4x the sf1 wall).
+    - Frontier rounds probe k lengths spaced evenly in (lo, hi) over the
+      FRONTIER, the positions whose lo-prefix is shared (a position can
+      start an L-repeat, L > lo, only if its lo-prefix is already shared).
+      k is the most the per-round budget admits for |frontier| * hi, so a
+      collapsed frontier resolves the whole window in one round and a
+      heavily-duplicated one bisects (k = 1, the 100 TB path).
+    After a round lo is its largest shared length, hi its smallest failed
+    length above lo, and the frontier the hits at lo (a lazy
+    localCheckpoint that the round's count job fills, so lineage never
+    nests). Driver involvement is one count per length per round.
     Corpora whose repeats are all shorter than the rung grid (L* < 8)
     take a direct content-grouped ladder over L in [1, 7] — one job, no
     fingerprints; empty documents are filtered before any position
@@ -2104,149 +2115,78 @@ def dedup_suffix_lcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     LCP property) with a 21-round unrolled prefix-bisection computing
     each adjacent pair's exact LCP in static SQL.
 
-    Scale shape: the seed is ONE scan-shaped job (<= log2 rung-cap
-    fingerprint rows per position, one hash agg); every later job touches
-    only the frontier — positions inside cross-document duplicated runs —
-    which the rung seed has already collapsed to the near-dup cluster
-    positions. The text side broadcasts below {_LCS_BCAST_DOCS} docs and
-    shuffle-joins above. Nothing is quadratic: candidate positions bound
-    the work, never document pairs, and rung fingerprints hash at most
-    2 * {_LCS_RUNG_CAP} chars per position regardless of document length."""
+    Scale shape: the seed rounds are scan-shaped (one fingerprint row per
+    position); every later round touches only the frontier — positions
+    inside cross-document duplicated runs. The text side broadcasts below
+    {_LCS_BCAST_DOCS} docs and shuffle-joins above. Nothing is quadratic:
+    candidate positions bound the work, never document pairs, and seed
+    fingerprints hash at most {_LCS_RUNG_CAP} chars per position regardless
+    of document length."""
+
+    def empty() -> DataFrame:
+        return spark.createDataFrame(
+            [(0, 0, 0)], "lcs_len int, n_repeats bigint, n_docs bigint"
+        )
+
     docs = _lcs_docs(spark, sf_dir)
     max_n, n_docs = _lcs_stats(spark, sf_dir)
-    empty = spark.createDataFrame(
-        [(0, 0, 0)], "lcs_len int, n_repeats bigint, n_docs bigint"
-    )
     if n_docs < 2 or max_n == 0:
-        return empty
+        return empty()
     d_txt = F.broadcast(docs) if n_docs <= _LCS_BCAST_DOCS else docs
-
-    if max_n < 8:
-        # Whole corpus is below the rung grid: one-shot content ladder over
-        # L in [1, max_n] — contents compared directly (7-char strings, no
-        # fingerprints), one scan + one hash agg. The n >= 1 filter keeps
-        # empty documents out of the generator (sequence(1, 0) is the
-        # DESCENDING [1, 0] in Spark — two empty docs must not fabricate a
-        # shared empty prefix).
-        lad = (
-            docs.filter(F.col("n") >= 1)
-            .select("doc_id", "text", "n",
-                    F.explode(F.expr("sequence(1, n)")).alias("ln"))
-            .select("doc_id", "ln",
-                    F.expr("explode(sequence(1, n - ln + 1))").alias("i"),
-                    "text")
-            .select("doc_id", "ln", F.expr("substring(text, i, ln)").alias("gc"))
-        )
-        shared = (
-            lad.groupBy("ln", "gc")
-            .agg(F.count_distinct("doc_id").alias("nd"))
-            .filter(F.col("nd") >= 2)
-            .persist()
-        )
-        lstar = shared.agg(F.max("ln")).first()[0]
-        if not lstar:
-            shared.unpersist()
-            return empty
-        grp = shared.filter(F.col("ln") == lstar).select("gc")
-        # one Expand aggregation: distinct contents + distinct docs in one
-        # job. localCheckpoint the 1-row readout so `shared` can be
-        # unpersisted before returning (ADVICE r10: the success path leaked
-        # the persisted blocks for the session's lifetime).
-        res = (
-            lad.filter(F.col("ln") == lstar)
-            .join(grp, "gc", "left_semi")
-            .agg(
-                F.count_distinct("gc").alias("n_repeats"),
-                F.count_distinct("doc_id").alias("n_docs"),
-            )
-            .select(
-                F.lit(int(lstar)).cast("int").alias("lcs_len"),
-                "n_repeats", "n_docs",
-            )
-            .localCheckpoint()
-        )
-        shared.unpersist()
-        return res
-
-    # --- rung-ladder bisection seed. Rung-r fingerprints exist for every
-    # position whose full r-gram fits; a position starting an L*-repeat has
-    # suffix length >= L* >= r, so for every rung r <= L* its r-gram is the
-    # shared run's prefix — the best (largest) shared rung pins
-    # lo = best <= L* with its positions a SUPERSET of the L*-starting
-    # positions: the exact frontier invariant the window search needs. The
-    # grid is probed by BINARY SEARCH OVER RUNG INDICES with the frontier
-    # reused across probes: only probes taken before any rung has succeeded
-    # scan full corpus positions (<= log2(#rungs) of them, worst case —
-    # r9's cold start ran ~4 full-position rounds routinely); every later
-    # probe runs over the current frontier, which collapses toward
-    # duplicated-run positions as the rung grows. A fused
-    # all-rungs-in-one-job seed was tried first and REJECTED: it shuffles
-    # sum_r positions_r ~ #rungs x corpus rows of near-unique (r, fp) keys
-    # (partial aggregation never combines random hashes) — 2.4x the sf1
-    # wall of this ladder search.
     rungs = []
     r = 8
     while r <= min(max_n, _LCS_RUNG_CAP):
         rungs.append(r)
         r *= 2
 
-    def _probe(L: int, frontier):
-        """shared(L) over `frontier` (None = all corpus positions).
-        Returns (shrunk_frontier_or_None, its_count). ONE action per call:
-        the eager localCheckpoint materializes the shrunk frontier (an
-        empty result IS the "not shared" verdict); the count reads the
-        checkpoint. localCheckpoint, not persist: each round's frontier
-        plan would otherwise nest the whole previous round's plan —
-        exponential plan trees by round ~10 (the pagerank lesson; old
-        blocks are freed by the ContextCleaner as rounds drop refs)."""
+    def _round(lengths: list[int], frontier):
+        """shared(L) for every L in `lengths` over `frontier` (None = all
+        corpus positions): the (doc_id, i, ln) hits as a lazy
+        localCheckpoint and the hit count per length, from one count job."""
         if frontier is None:
+            (L,) = lengths
             base = docs.filter(F.col("n") >= L).select(
-                "doc_id", "text",
+                "doc_id", "text", F.lit(L).alias("ln"),
                 F.expr(f"explode(sequence(1, n - {L} + 1))").alias("i"),
             )
         else:
             base = (
                 frontier.join(d_txt, "doc_id")
-                .filter(F.col("n") - F.col("i") + 1 >= L)
-                .select("doc_id", "i", "text")
+                .select("doc_id", "i", "text", "n",
+                        F.explode(F.array(*map(F.lit, lengths))).alias("ln"))
+                .filter(F.col("n") - F.col("i") + 1 >= F.col("ln"))
             )
-        test = base.select(
-            "doc_id", "i",
-            F.expr(f"xxhash64(substring(text, i, {L}))").alias("fp"),
-        ).persist()
-        hit = (
-            test.groupBy("fp")
-            .agg(F.count_distinct("doc_id").alias("nd"))
-            .filter(F.col("nd") >= 2)
-            .select("fp")
-        )
-        nxt = test.join(hit, "fp", "left_semi").select("doc_id", "i").localCheckpoint()
-        test.unpersist()
-        cnt = nxt.count()
-        return (nxt, cnt) if cnt else (None, 0)
+        hits = _shared_across_docs(
+            base.select("doc_id", "i", "ln",
+                        F.expr("xxhash64(substring(text, i, ln))").alias("fp")),
+            "ln", "fp",
+        ).select("doc_id", "i", "ln").localCheckpoint(eager=False)
+        return hits, dict(hits.groupBy("ln").count().collect())
 
-    def _fits_oneshot(cnt: int, lo_: int, hi_: int) -> bool:
-        w = hi_ - lo_ - 1
-        return (w >= 1 and cnt * w <= _LCS_ONESHOT_ROWS
-                and cnt * w * hi_ <= _LCS_ONESHOT_CHARS)
-
-    lo_idx, hi_idx = -1, len(rungs)
+    lo, hi = 0, max_n + 1
     frontier, f_cnt = None, 0
-    while hi_idx - lo_idx > 1:
-        if frontier is not None and _fits_oneshot(
-            f_cnt, rungs[lo_idx],
-            rungs[hi_idx] if hi_idx < len(rungs) else max_n + 1,
-        ):
-            break  # remaining window is cheaper to resolve exhaustively
-        mid_idx = (lo_idx + hi_idx) // 2
-        nf, cnt = _probe(rungs[mid_idx], frontier)
-        if nf is not None:
-            lo_idx, frontier, f_cnt = mid_idx, nf, cnt
+    while hi - lo > 1:
+        if frontier is None:
+            below = [r for r in rungs if r < hi]
+            if not below:
+                break
+            lengths = [below[(len(below) - 1) // 2]]
         else:
-            hi_idx = mid_idx
-    if lo_idx == -1:
-        # No shared 8-gram: L* < 8. One-shot direct ladder over L in [1, 7]
-        # (content-grouped — no fingerprints at these widths).
+            k = max(1, min(hi - lo - 1, _LCS_ROUND_ROWS // f_cnt,
+                           _LCS_ROUND_CHARS // (f_cnt * hi)))
+            lengths = [lo + j * (hi - lo) // (k + 1) for j in range(1, k + 1)]
+        hits, counts = _round(lengths, frontier)
+        shared = [L for L in lengths if counts.get(L)]
+        if shared:
+            lo = max(shared)
+            frontier = hits.filter(F.col("ln") == lo).select("doc_id", "i")
+            f_cnt = counts[lo]
+        hi = min([L for L in lengths if L > lo and not counts.get(L)], default=hi)
+
+    if lo == 0:
+        # No shared 8-gram (or the corpus is shorter than the grid): L* < 8.
+        # One-shot direct ladder over L in [1, 7], content-grouped — no
+        # fingerprints at these widths.
         lad = (
             docs.filter(F.col("n") >= 1)
             .select("doc_id", "text", "n",
@@ -2265,10 +2205,11 @@ def dedup_suffix_lcs(spark: SparkSession, sf_dir: str) -> DataFrame:
         lstar = sm.agg(F.max("ln")).first()[0]
         if not lstar:
             sm.unpersist()
-            return empty
+            return empty()
         grp = sm.filter(F.col("ln") == lstar).select("gc")
         # 1-row readout localCheckpointed so `sm` can be unpersisted on the
-        # success path too (ADVICE r10 leak fix, same as the max_n < 8 path).
+        # success path too (ADVICE r10: the success path leaked the
+        # persisted blocks for the session's lifetime).
         res = (
             lad.filter(F.col("ln") == lstar)
             .join(grp, "gc", "left_semi")
@@ -2285,59 +2226,17 @@ def dedup_suffix_lcs(spark: SparkSession, sf_dir: str) -> DataFrame:
         sm.unpersist()
         return res
 
-    lo = rungs[lo_idx]
-    # hi is proven either way the loop ended: hi_idx was only ever set by a
-    # FAILED probe at rungs[hi_idx] (so L* < rungs[hi_idx]); when no probed
-    # rung failed, the grid stopped at max_n (L* <= max_n trivially) or at
-    # the rung cap (the window bisection below does the honest work).
-    hi = rungs[hi_idx] if hi_idx < len(rungs) else max_n + 1
-
-    # Window bisection runs only while the one-shot budget rejects the
-    # window; the frontier shrinks every successful probe, so the search
-    # always hands off to the exhaustive job once it is cheap.
-    while hi - lo > 1 and not _fits_oneshot(f_cnt, lo, hi):
-        mid = (lo + hi) // 2
-        nf, cnt = _probe(mid, frontier)
-        if nf is not None:
-            frontier, f_cnt, lo = nf, cnt, mid
-        else:
-            hi = mid
-    if hi - lo > 1:
-        # One-shot exhaustive probe: every candidate length in (lo, hi) for
-        # every frontier position, one scan + one hash agg — replaces the
-        # tail of the bisection once the frontier has collapsed.
-        sh = (
-            frontier.join(d_txt, "doc_id")
-            .filter(F.col("n") - F.col("i") + 1 >= lo + 1)
-            .select("doc_id", "i", "text",
-                    F.expr(f"explode(sequence({lo + 1}, least({hi - 1}, n - i + 1)))").alias("ln"))
-            .select("doc_id", "ln",
-                    F.expr("xxhash64(substring(text, i, ln))").alias("fp"))
-            .groupBy("ln", "fp")
-            .agg(F.count_distinct("doc_id").alias("nd"))
-            .filter(F.col("nd") >= 2)
-            .agg(F.max("ln"))
-            .first()[0]
-        )
-        lo = int(sh) if sh else lo
-    if lo == 0:
-        return empty
+    # Readout at L* = lo: the frontier's lo-prefixes grouped by CONTENT on
+    # the same min != max predicate, then one Expand aggregation:
+    # n_repeats = distinct shared contents, n_docs = distinct docs holding
+    # one.
     sharedg = (
         frontier.join(d_txt, "doc_id")
         .filter(F.col("n") - F.col("i") + 1 >= lo)
         .select("doc_id", F.expr(f"substring(text, i, {lo})").alias("gc"))
     )
-    grp = (
-        sharedg.groupBy("gc")
-        .agg(F.count_distinct("doc_id").alias("nd"))
-        .filter(F.col("nd") >= 2)
-        .select("gc")
-    )
-    # one Expand aggregation replaces the r9 two-agg scalar crossJoin:
-    # n_repeats = distinct shared contents, n_docs = distinct docs holding
-    # one — both over the semi-joined positions, single job
     return (
-        sharedg.join(grp, "gc", "left_semi")
+        _shared_across_docs(sharedg, "gc")
         .agg(
             F.count_distinct("gc").alias("n_repeats"),
             F.count_distinct("doc_id").alias("n_docs"),

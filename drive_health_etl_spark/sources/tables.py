@@ -2,7 +2,9 @@
 
 Scans stay fully declarative so Catalyst pushes filters and prunes columns
 into the parquet reader — at 100 TB the scan *is* the query cost, so nothing
-here materializes or caches eagerly.
+here materializes or caches eagerly. Only the table file's schema is cached:
+inferring it is a Spark job on every read, and a query reads the same table
+file many times in one session.
 """
 
 from __future__ import annotations
@@ -11,6 +13,9 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from drive_health_etl_spark.operators.fitcache import dataset_cached
 
 TABLES = (
     "region",
@@ -44,6 +49,32 @@ _TS_COLUMNS = {
 }
 
 
+def _file_stamp(path: str) -> str | None:
+    """Identity of a table file: (inode, mtime_ns, size) of the path and, for
+    a directory, of each data file or partition directory in it. An
+    overwrite at the same path is a new stamp. None when the path is not a
+    local file (Spark resolves it and infers its schema as before)."""
+    try:
+        st = os.stat(path)
+        parts = [f"{st.st_ino}:{st.st_mtime_ns}:{st.st_size}"]
+        if os.path.isdir(path):
+            for entry in sorted(os.scandir(path), key=lambda e: e.name):
+                if not entry.name.startswith(("_", ".")):
+                    fs = entry.stat()
+                    parts.append(f"{entry.name}:{fs.st_ino}:{fs.st_mtime_ns}:{fs.st_size}")
+    except OSError:
+        return None
+    return "|".join(parts)
+
+
+@dataset_cached
+def _table_schema(spark: SparkSession, sf_dir: str, name: str, stamp: str) -> StructType:
+    """The inferred schema of one table file, keyed on its `stamp` so a
+    rewrite at the same path infers again (a stale schema would read the
+    new file's missing columns as NULL)."""
+    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet")).schema
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # The driver may hand us a session without our defaults; these two are
     # required for correct reads of the testdata (nanos timestamps) and for
@@ -55,7 +86,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     from drive_health_etl_spark.session import ship_package
 
     ship_package(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    # Only the schema is cached, never the DataFrame: two loads of one table
+    # must carry distinct attribute ids or a self-join drops its predicate.
+    stamp = _file_stamp(path)
+    reader = spark.read
+    if stamp is not None:
+        reader = reader.schema(_table_schema(spark, sf_dir, name, stamp))
+    df = reader.parquet(path)
     for col in _TS_COLUMNS.get(name, ()):
         dtype = dict(df.dtypes).get(col)
         if dtype == "bigint":

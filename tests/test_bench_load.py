@@ -424,3 +424,27 @@ def test_gated_all_flagged_keeps_min_and_says_so():
     assert rec["flagged_and_kept"] is True
     assert rec["resamples"] == 2
     assert len(rec["flagged_windows"]) == 3
+
+
+def test_gated_ships_faster_flagged_pass_over_slower_clean_pass():
+    # ADVICE r12 item 2: pass 1 is flagged but fast, pass 2 clean but slow.
+    # Load only inflates walls, so the flagged minimum is the tighter upper
+    # bound: it ships, marked as coming from a flagged window.
+    times = iter([1.0, 1.0, 3.0, 3.0])
+    t, rec = sample_query_gated(
+        lambda: next(times), snapshot=_bursty_then_quiet_snapshot(1),
+        loadavg=lambda: (0.0,), max_resamples=2)
+    assert t == 1.0
+    assert rec["flagged_and_kept"] is True
+    assert rec["resamples"] == 1
+    assert len(rec["flagged_windows"]) == 1
+
+
+def test_gated_tie_ships_the_clean_pass():
+    times = iter([2.0, 2.0, 2.0, 2.0])
+    t, rec = sample_query_gated(
+        lambda: next(times), snapshot=_bursty_then_quiet_snapshot(1),
+        loadavg=lambda: (0.0,), max_resamples=2)
+    assert t == 2.0
+    assert "flagged_and_kept" not in rec
+    assert rec["resamples"] == 1

@@ -413,14 +413,11 @@ def _brute_lcs(docs: dict[int, str]):
     return 0, 0, 0
 
 
-def test_suffix_lcs_matches_bruteforce(spark, tmp_path):
-    """Exactness of the rank-bisection longest cross-doc repeat against a
-    pure-Python third implementation (the DuckDB oracle is the second):
-    engineered corpus with two planted max-length runs shared by two pairs,
-    shorter decoys, and no exact duplicates."""
+def _plant_lcs_corpus(spark, tmp_path):
+    """Engineered corpus with two planted max-length runs shared by two
+    pairs, shorter decoys, and no exact duplicates; written as
+    documents.parquet under tmp_path. Returns the brute-force answer."""
     import random
-
-    from drive_health_etl_spark.operators.dedup import dedup_suffix_lcs
 
     rng = random.Random(93)
     alpha = "abcdefghijklmnopqrstuvwxyz0123456789"
@@ -445,8 +442,65 @@ def test_suffix_lcs_matches_bruteforce(spark, tmp_path):
     spark.createDataFrame(
         rows, "doc_id long, text string, lang string, source string, n_chars long"
     ).coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
+    return want
+
+
+def _lcs_rows_and_jobs(spark, sf_dir: str, group: str):
+    """dedup_suffix_lcs rows and the Spark jobs its CALL fired (the search
+    rounds; the returned readout is not executed inside the group)."""
+    from drive_health_etl_spark.operators.dedup import dedup_suffix_lcs
+
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        df = dedup_suffix_lcs(spark, sf_dir)
+    finally:
+        sc._jsc.clearJobGroup()
+    rows = [(r["lcs_len"], r["n_repeats"], r["n_docs"]) for r in df.collect()]
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return rows, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_suffix_lcs_matches_bruteforce(spark, tmp_path):
+    """Exactness of the longest cross-doc repeat search against a
+    pure-Python third implementation (the DuckDB oracle is the second)."""
+    from drive_health_etl_spark.operators.dedup import dedup_suffix_lcs
+
+    want = _plant_lcs_corpus(spark, tmp_path)
     got = dedup_suffix_lcs(spark, str(tmp_path)).collect()
     assert [(r["lcs_len"], r["n_repeats"], r["n_docs"]) for r in got] == [want]
+
+
+def test_suffix_lcs_exact_at_both_round_budget_extremes(spark, tmp_path, monkeypatch):
+    """The per-round budget only schedules the search. k = 1 (a zero row
+    budget) makes every frontier round a bisection, the path a large
+    frontier takes at scale; an unlimited budget resolves the window in one
+    exhaustive round. Both must equal the brute force."""
+    from drive_health_etl_spark.operators import dedup as D
+
+    want = _plant_lcs_corpus(spark, tmp_path)
+    monkeypatch.setattr(D, "_LCS_ROUND_ROWS", 0)
+    bisect, bisect_jobs = _lcs_rows_and_jobs(spark, str(tmp_path), f"lcs-k1-{tmp_path.name}")
+    assert bisect == [want]
+    monkeypatch.setattr(D, "_LCS_ROUND_ROWS", 10**18)
+    monkeypatch.setattr(D, "_LCS_ROUND_CHARS", 10**18)
+    one, one_jobs = _lcs_rows_and_jobs(spark, str(tmp_path), f"lcs-all-{tmp_path.name}")
+    assert one == [want]
+    # the budgets took different schedules: bisection needs more rounds
+    assert bisect_jobs > one_jobs
+
+
+def test_suffix_lcs_warm_call_job_count(spark, tmp_path):
+    """A warm call (fits cached) fires a bounded number of jobs: here one
+    seed round (window shuffle + count: 3 jobs) and one frontier round that
+    resolves the window (the same plus the text broadcast: 4 jobs). The
+    three-path search this loop replaced fired 13 here. The pin catches a
+    search that grows rounds or per-round jobs."""
+    want = _plant_lcs_corpus(spark, tmp_path)
+    _lcs_rows_and_jobs(spark, str(tmp_path), f"lcs-cold-{tmp_path.name}")
+    rows, jobs = _lcs_rows_and_jobs(spark, str(tmp_path), f"lcs-warm-{tmp_path.name}")
+    assert rows == [want]
+    assert jobs <= 7, jobs
 
 
 def test_suffix_lcs_short_repeat_and_no_repeat(spark, tmp_path):
@@ -573,8 +627,8 @@ def test_suffix_lcs_short_ladder_unpersists_on_success(spark, tmp_path, monkeypa
     monkeypatch.setattr(DataFrame, "unpersist", track_unpersist)
 
     for docs in (
-        {1: "abcXYZ", 2: "qqXYZpp", 3: "zzzz"},   # L* = 3: lo_idx == -1 ladder
-        {1: "abXde", 2: "fgXhi"},                  # max_n < 8 one-shot ladder
+        {1: "abcXYZ", 2: "qqXYZpp", 3: "zzzz"},   # L* = 3: no rung shared
+        {1: "abXde", 2: "fgXhi"},                  # max_n < 8: no rung at all
     ):
         _clear(D._lcs_docs, D._lcs_stats)
         persisted.clear()

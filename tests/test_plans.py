@@ -592,16 +592,17 @@ BENCH_PLAN_FINGERPRINTS = {
         "broadcast_exchange": 1,
         "BroadcastHashJoin": 1,
     },
-    # Suffix-LCS readout (the rung/window probes are bounded driver rounds
-    # over a checkpointed frontier — this pins the steady-state readout):
-    # content groupBy + ONE Expand aggregation (distinct contents +
-    # distinct docs in one job; the r9 two-agg scalar crossJoin is gone);
-    # the frontier scan is the localCheckpoint, the text side broadcasts
+    # Suffix-LCS readout (the search rounds are bounded driver rounds over
+    # a checkpointed frontier — this pins the steady-state readout): one
+    # content window (min != max doc_id over gc) + ONE Expand aggregation
+    # (distinct contents + distinct docs in one job). The window replaced
+    # the content groupBy + left_semi join back to the positions (was 5
+    # shuffles, 2 broadcasts, 2 BHJ, 1 SMJ); the frontier scan is the
+    # localCheckpoint, the text side broadcasts
     "dedup_suffix_lcs": {
-        "shuffle_exchange": 5,
-        "broadcast_exchange": 2,
-        "BroadcastHashJoin": 2,
-        "SortMergeJoin": 1,
+        "shuffle_exchange": 3,
+        "broadcast_exchange": 1,
+        "BroadcastHashJoin": 1,
     },
     # DP counts: one map-side-combinable aggregate; noise is scalar math
     "dq_dp_counts": {"shuffle_exchange": 1},
